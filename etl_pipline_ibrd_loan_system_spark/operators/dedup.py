@@ -6,7 +6,7 @@ DataFrame ops so Catalyst/Tungsten keep them JVM-side:
 
 - exact_dedup            hash-groupBy, keep canonical id
 - word_shingles          word n-gram shingle sets
-- minhash_signatures     k permutation-min hashes, map-side-combinable
+- minhash_signatures     k permutation-min hashes, one Arrow kernel
 - lsh_candidate_pairs    banded signature bucketing -> candidate pairs
 - jaccard_verify_pairs   exact set-Jaccard verification of candidates
 - minhash_dedup_pairs    the full MinHash+LSH pipeline
@@ -18,12 +18,12 @@ identical in Spark (`conv(substr(md5(x),1,15),16,10)`) and DuckDB
 (`CAST('0x' || substr(md5(x),1,15) AS BIGINT)`), so oracles can replay the
 exact pipeline.
 
-Scale notes: signatures aggregate from an exploded shingle stream with
-map-side partial min — no shingle array materialization per row; the LSH
-self-join shuffles on (band, bucket) which is uniformly distributed by
-construction; the only quadratic step (verification) runs on candidate
-pairs only. Skewed buckets (e.g. boilerplate shingles) are bounded by
-banding; AQE skew-join handles the residue.
+Scale notes: signatures are a narrow Arrow kernel over hashed shingle
+arrays — no signature shuffle; the LSH self-join shuffles on (band,
+bucket) which is uniformly distributed by construction; the only
+quadratic step (verification) runs on candidate pairs only. Skewed
+buckets (e.g. boilerplate shingles) are bounded by banding; AQE
+skew-join handles the residue.
 """
 
 from __future__ import annotations
@@ -109,92 +109,77 @@ def word_shingles(
 
 
 def minhash_signatures(
-    shingled: DataFrame, id_col: str, k: int = 64, prehashed: bool = False
+    shingled: DataFrame, id_col: str, k: int = 64
 ) -> DataFrame:
     """k-permutation MinHash signature as k columns mh_0..mh_{k-1}.
 
-    `prehashed=True` means `shingles` already holds 64-bit hash values
-    (array<bigint>) rather than shingle strings — the verify-stage
-    restructure (optimization r12) hashes each shingle ONCE at the pinned
-    projection and every downstream consumer (signatures here, exact
-    verify in jaccard_verify_pairs) works on the 8-byte hashes. pmod
-    (not %) maps the full signed range into [0, P) so the permutation
-    multiply stays within int64 (h*a < 2^62) — xxhash64 inputs are
-    signed, and an overflowing % would raise under ANSI mode.
+    `shingles` holds 64-bit shingle hashes (array<bigint>, e.g. the
+    `transform(shingles, xxhash64)` projection minhash_dedup_pairs pins):
+    each shingle is hashed ONCE upstream and every downstream consumer
+    (signatures here, exact verify in jaccard_verify_pairs) works on the
+    8-byte hashes. Precondition: ONE row per id — the kernel signs each
+    row independently and never merges rows that share an id (word_shingles
+    emits one row per doc).
 
-    Prehashed signatures are ONE narrow Arrow kernel over the hash
-    arrays (optimization r12, guide §2.2/§4): (pmod(H)·aᵢ+bᵢ) mod P,
-    min per row, vectorized k×Σ|shingles| in numpy int64 — bit-exact vs
-    the SQL form because every operand stays < 2^62 (h,a < P = 2^31-1)
-    and numpy's % matches Spark's pmod for non-negative moduli. This
-    removes the explode → k-expression groupBy aggregation and with it
-    the signature Exchange entirely (the kernel is a narrow transform;
-    the old shuffle carried k longs per doc per map task). Linear in
-    shingle mass per row, so safe under exact-copy replication (each
-    copy is an independent row — sf1 decade verified).
-
-    The string path keeps the exploded groupBy-min form: partial
-    aggregation is map-side, so the shuffle carries only k ints per
-    document; md5-hex-conv hashing stays in the JVM.
+    Signatures are ONE narrow Arrow kernel over the hash arrays
+    (optimization r12, guide §2.2/§4): (pmod(H)·aᵢ+bᵢ) mod P, min per
+    row, vectorized k×Σ|shingles| in numpy int64 — bit-exact vs the SQL
+    explode → groupBy-min form because every operand stays < 2^62
+    (h,a < P = 2^31-1) and numpy's % matches Spark's pmod for
+    non-negative moduli (pmod, not %, maps the full signed xxhash64
+    range into [0, P)). There is no signature Exchange: the kernel is a
+    narrow transform. Linear in shingle mass per row, so safe under
+    exact-copy replication (each copy is an independent row — sf1
+    decade verified). A NULL or empty shingle array emits no row, as
+    explode did.
     """
-    if prehashed:
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        A = np.array([perm_params(i)[0] for i in range(k)], dtype=np.int64)
-        B = np.array([perm_params(i)[1] for i in range(k)], dtype=np.int64)
-        P = MINHASH_P
-        id_type = shingled.schema[id_col].dataType.simpleString()
+    A = np.array([perm_params(i)[0] for i in range(k)], dtype=np.int64)
+    B = np.array([perm_params(i)[1] for i in range(k)], dtype=np.int64)
+    P = MINHASH_P
+    id_type = shingled.schema[id_col].dataType.simpleString()
 
-        def part(batches):
-            for pdf in batches:
+    def part(batches):
+        for pdf in batches:
+            n = len(pdf)
+            if not n:
+                continue
+            arrs = pdf["shingles"]
+            present = arrs.notna().to_numpy()
+            lens = np.fromiter(
+                (len(a) if p else 0 for a, p in zip(arrs, present)),
+                dtype=np.int64, count=n,
+            )
+            keep = lens > 0
+            if not keep.all():
+                # NULL / empty shingle sets have nothing to explode;
+                # callers filter size >= n upstream, so this is
+                # belt-and-braces
+                pdf = pdf[keep]
+                arrs = pdf["shingles"]
+                lens = lens[keep]
                 n = len(pdf)
                 if not n:
                     continue
-                arrs = pdf["shingles"]
-                lens = np.fromiter(
-                    (len(a) for a in arrs), dtype=np.int64, count=n
-                )
-                keep = lens > 0
-                if not keep.all():
-                    # the SQL form emits no row for an empty shingle set
-                    # (nothing to explode); callers filter size >= n
-                    # upstream, so this is belt-and-braces
-                    pdf = pdf[keep]
-                    arrs = pdf["shingles"]
-                    lens = lens[keep]
-                    n = len(pdf)
-                    if not n:
-                        continue
-                H = np.mod(
-                    np.concatenate(
-                        [np.asarray(a, dtype=np.int64) for a in arrs]
-                    ),
-                    P,
-                )
-                M = (H[None, :] * A[:, None] + B[:, None]) % P  # k × Σ|sh|
-                starts = np.zeros(n, dtype=np.int64)
-                np.cumsum(lens[:-1], out=starts[1:])
-                S = np.minimum.reduceat(M, starts, axis=1)  # k × n
-                out = {id_col: pdf[id_col].to_numpy()}
-                for i in range(k):
-                    out[f"mh_{i}"] = S[i]
-                yield pd.DataFrame(out)
+            H = np.mod(
+                np.concatenate([np.asarray(a, dtype=np.int64) for a in arrs]),
+                P,
+            )
+            M = (H[None, :] * A[:, None] + B[:, None]) % P  # k × Σ|sh|
+            starts = np.zeros(n, dtype=np.int64)
+            np.cumsum(lens[:-1], out=starts[1:])
+            S = np.minimum.reduceat(M, starts, axis=1)  # k × n
+            out = {id_col: pdf[id_col].to_numpy()}
+            for i in range(k):
+                out[f"mh_{i}"] = S[i]
+            yield pd.DataFrame(out)
 
-        schema = f"{id_col} {id_type}, " + ", ".join(
-            f"mh_{i} long" for i in range(k)
-        )
-        return shingled.select(id_col, "shingles").mapInPandas(part, schema)
-    h = (
-        shingled.select(id_col, F.explode("shingles").alias("s"))
-        .select(id_col, (shared_hash60(F.col("s")) % MINHASH_P).alias("h"))
+    schema = f"{id_col} {id_type}, " + ", ".join(
+        f"mh_{i} long" for i in range(k)
     )
-    # one parsed expr per permutation (k x ~6 Column calls is py4j-bound)
-    aggs = []
-    for i in range(k):
-        a, b = perm_params(i)
-        aggs.append(F.expr(f"min((h * {a} + {b}) % {MINHASH_P}) AS mh_{i}"))
-    return h.groupBy(id_col).agg(*aggs)
+    return shingled.select(id_col, "shingles").mapInPandas(part, schema)
 
 
 def lsh_candidate_pairs(
@@ -420,7 +405,7 @@ def minhash_dedup_pairs(
             ),
         )
     )
-    sigs = minhash_signatures(shingled, id_col, k, prehashed=True)
+    sigs = minhash_signatures(shingled, id_col, k)
     if pairgen != "grouped":
         # the "join" path self-joins the band table, so the signature
         # frame feeds two subtrees — pin it. The grouped path consumes
@@ -789,6 +774,22 @@ def _arrow_signatures(
     return df.mapInPandas(fn, f"{id_col} {id_type}, sig array<bigint>")
 
 
+def _hyperplanes(nbits: int, dim: int):
+    """The (nbits, dim) random-hyperplane matrix shared by every
+    embedding LSH operator: deterministic hash-derived weights in
+    [-1, 1), so corpus and query sides sign with identical planes."""
+    import numpy as np
+
+    def w(bit: int, i: int) -> float:
+        x = (_A_MULT * (bit * dim + i + 1) + 12345) % MINHASH_P
+        return (x / MINHASH_P) * 2.0 - 1.0
+
+    return np.array(
+        [[w(bit, i) for i in range(dim)] for bit in range(nbits)],
+        dtype="float64",
+    )
+
+
 def embedding_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -797,7 +798,6 @@ def embedding_lsh_pairs(
     bands: int = 16,
     band_bits: int = 4,
     dim: int = 64,
-    arrow_signatures: bool = True,
     hamming_prefilter: int | None = None,
     pairgen: str = "join",
 ) -> DataFrame:
@@ -806,80 +806,17 @@ def embedding_lsh_pairs(
     cosine verify. Detection prob at cos=0.95 (bit-agree ~0.9) with 16
     bands of 4 bits: 1-(1-0.9^4)^16 ≈ 0.9999.
 
-    The hyperplane matrix enters the plan as ONE constant-foldable literal
-    array<array<double>>; all projections run through higher-order
-    functions (zip_with/aggregate/transform), keeping the expression tree
-    small enough for whole-stage codegen (a naive 64x64 element_at sum
-    blows the JIT method limit and OOMs the broadcast build)."""
-    v = F.col(vec_col).cast("array<double>")
-    nbits = bands * band_bits
-
-    # hyperplane weights: deterministic hash-derived in [-1, 1)
-    def w(bit: int, i: int) -> float:
-        x = (_A_MULT * (bit * dim + i + 1) + 12345) % MINHASH_P
-        return (x / MINHASH_P) * 2.0 - 1.0
-
-    # all-literal => Catalyst folds to a single Literal. Built as ONE
-    # F.expr string, not nested F.array(F.lit(...)): nbits x dim
-    # per-element Column constructions are ~10k py4j round trips, which
-    # cost MORE driver time than executing the query (measured 3.6-4.4s
-    # build vs 1.4-1.9s exec at 64x64 before this). repr() round-trips
-    # doubles exactly, so the parsed literal is bit-identical.
-    # Bucket rows carry ONLY (id, band, chunk): pairs dedup on bare ids
-    # before any vector travels, then vectors join back once per unique
-    # pair — cosine is evaluated once per candidate, not once per
-    # band-collision (a ~bands-fold saving in shuffle bytes + compute).
+    Signatures come from one Arrow-batched matmul per batch
+    (_arrow_signatures). Bucket rows carry ONLY (id, band, chunk): pairs
+    dedup on bare ids before any vector travels, then vectors join back
+    once per unique pair — cosine is evaluated once per candidate, not
+    once per band-collision (a ~bands-fold saving in shuffle bytes +
+    compute)."""
     from ..cache import pin
 
-    if arrow_signatures:
-        import numpy as np
-
-        W = np.array(
-            [[w(bit, i) for i in range(dim)] for bit in range(nbits)],
-            dtype="float64",
-        )
-        sigs = _arrow_signatures(df, id_col, vec_col, W, bands, band_bits)
-    else:
-        # pure-JVM fallback: interpreted higher-order functions — correct
-        # but nbits x dim lambda evals per row; ~15x slower than Arrow.
-        # Built ONLY on this branch (optimization r11): the chunks
-        # listcomp alone is ~bands x band_bits x 4 py4j round trips
-        # (~0.5s of profiled driver time per call at 4x16), which the
-        # Arrow path was paying for nothing.
-        w_lit = F.expr(
-            "array(%s)"
-            % ",".join(
-                "array(%s)" % ",".join(repr(w(bit, i)) for i in range(dim))
-                for bit in range(nbits)
-            )
-        )
-        bits_arr = F.transform(
-            w_lit,
-            lambda wrow: F.when(
-                F.aggregate(
-                    F.zip_with(v, wrow, lambda x, wi: x * wi),
-                    F.lit(0.0),
-                    lambda s, x: s + x,
-                )
-                >= 0,
-                1,
-            ).otherwise(0),
-        )
-        chunks = F.array(
-            *[
-                sum(
-                    [
-                        F.element_at(F.col("bits"), b * band_bits + r + 1) * (2**r)
-                        for r in range(band_bits)
-                    ],
-                    F.lit(0),
-                )
-                for b in range(bands)
-            ]
-        )
-        sigs = df.select(F.col(id_col), bits_arr.alias("bits")).select(
-            F.col(id_col), chunks.alias("sig")
-        )
+    v = F.col(vec_col).cast("array<double>")
+    W = _hyperplanes(bands * band_bits, dim)
+    sigs = _arrow_signatures(df, id_col, vec_col, W, bands, band_bits)
     if pairgen == "join" or hamming_prefilter is not None:
         # buckets x2 on the join path, prefilter x2; the grouped path
         # without a prefilter consumes sigs exactly once — a single-use
@@ -1528,8 +1465,8 @@ def incremental_minhash_pairs(
 
     shing_c = pin(_hashed(corpus))
     shing_b = pin(_hashed(batch))
-    sig_c = minhash_signatures(shing_c, id_col, k, prehashed=True)
-    sig_b = minhash_signatures(shing_b, id_col, k, prehashed=True)
+    sig_c = minhash_signatures(shing_c, id_col, k)
+    sig_b = minhash_signatures(shing_b, id_col, k)
     bk_c = _band_buckets(sig_c, id_col, bands, rows_per_band)
     bk_b = pin(_band_buckets(sig_b, id_col, bands, rows_per_band))
 
@@ -1914,7 +1851,6 @@ def embedding_lsh_range_search(
     bands: int = 4,
     band_bits: int = 16,
     dim: int = 64,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Batch range search (radius query): for EVERY query vector, all
     corpus vectors with cosine >= threshold — the dedupe-against-index
@@ -1923,29 +1859,17 @@ def embedding_lsh_range_search(
     batch are signed with the SAME deterministic hyperplanes as
     embedding_lsh_pairs, but the bucket join is batch-vs-corpus, so
     the corpus NEVER self-joins — cost is O(|batch| x bucket density),
-    not O(|corpus|^2 / buckets), and the batch bucket table broadcasts
-    when small (the realistic ingest shape; set broadcast_queries=False
-    for giant backfills and it degrades to a shuffle-hash join).
+    not O(|corpus|^2 / buckets). The batch side (bucket table and
+    vectors) is broadcast: a batch is small next to its corpus by
+    construction (the ingest shape).
 
     Query/corpus ids must be disjoint; output (query_id, match_id,
     cos_sim). Recall follows the embedding_lsh_pairs s-curve; at the
     planted-duplicate regime (identical vectors -> identical sign
     bits) it is structurally 1.0."""
-    import numpy as np
-
     from ..cache import pin
 
-    nbits = bands * band_bits
-
-    def w(bit: int, i: int) -> float:
-        # the embedding_lsh_pairs hyperplane family, verbatim
-        x = (_A_MULT * (bit * dim + i + 1) + 12345) % MINHASH_P
-        return (x / MINHASH_P) * 2.0 - 1.0
-
-    W = np.array(
-        [[w(bit, i) for i in range(dim)] for bit in range(nbits)],
-        dtype="float64",
-    )
+    W = _hyperplanes(bands * band_bits, dim)
 
     def buckets_of(df: DataFrame, side: str) -> DataFrame:
         sigs = _arrow_signatures(df, id_col, vec_col, W, bands, band_bits)
@@ -1956,9 +1880,8 @@ def embedding_lsh_range_search(
 
     qb = buckets_of(queries, "query")
     cb = buckets_of(corpus, "match")
-    qb = F.broadcast(qb) if broadcast_queries else qb
     cands = (
-        cb.join(qb, ["band", "chunk"])
+        cb.join(F.broadcast(qb), ["band", "chunk"])
         .select("query_id", "match_id")
         .distinct()
     )
@@ -1986,7 +1909,7 @@ def embedding_lsh_range_search(
         lambda s, x: s + x,
     )
     return (
-        cands.join(F.broadcast(qn) if broadcast_queries else qn, "query_id")
+        cands.join(F.broadcast(qn), "query_id")
         .join(cn, "match_id")
         .select(
             "query_id",

@@ -48,7 +48,6 @@ CHANGE_NEW = "new"
 CHANGE_T1 = "t1"
 CHANGE_T2 = "t2"
 CHANGE_NONE = "unchanged"
-CHANGE_UNTOUCHED = "untouched"  # dim-only rows of the full-outer classify
 
 
 def _any_differs(cols: Sequence[str]) -> Column:
@@ -66,33 +65,19 @@ def scd_classify(
     fixed_cols: Sequence[str] = (),
     sk_col: str = "sk",
     current_col: str = "is_current",
-    broadcast_dim: bool = True,
-    include_untouched: bool = False,
 ) -> DataFrame:
     """The SCD probe join + routing decision (SSIS outputs New / Changing /
     Historical / no-op), as a single classified DataFrame.
 
-    `broadcast_dim=True` mirrors the SSIS full-cache lookup (dims are
-    broadcastable by construction here); pass False for a dimension that
-    outgrows the broadcast threshold — the probe becomes a key-shuffle
-    join and AQE handles any key skew.
-
-    `include_untouched=True` (optimization r12, guide §3) widens the
-    probe to a FULL OUTER join so current dim rows whose key is absent
-    from staging come back as `change_type='untouched'` — folding what
-    was a separate `current LEFT ANTI staging-keys` join (a second pass
-    over BOTH inputs) into the one probe. A full outer join cannot
-    broadcast, so this form is a key-shuffle join regardless of
-    `broadcast_dim` — which is also the only shape available at
-    dimensions past the broadcast threshold, where the fold halves the
-    shuffles instead of merely the scans. Staging presence is detected
-    by an explicit marker column, never by attr nullness (staging attrs
-    may be legitimately NULL).
+    The probe is a left join of staging against the BROADCAST current
+    slice — the SSIS full-cache lookup (dims are broadcastable by
+    construction here), so classification never shuffles staging.
 
     Returns staging columns (s_-prefixed attrs), the matched current dim row's
-    columns, and `change_type` ∈ {new, t1, t2, unchanged} (+ untouched).
-    T2 takes priority over T1 when both change (SSIS routes such rows to
-    the Historical output).
+    columns, and `change_type` ∈ {new, t1, t2, unchanged}. A staging row
+    with no current match (including a NULL staging key) is `new`; attrs
+    compare null-safely. T2 takes priority over T1 when both change (SSIS
+    routes such rows to the Historical output).
     """
     attrs = [*t1_cols, *t2_cols, *fixed_cols]
     s_ren = staging.select(
@@ -105,18 +90,7 @@ def scd_classify(
         .when(_any_differs(t1_cols), F.lit(CHANGE_T1))
         .otherwise(F.lit(CHANGE_NONE))
     )
-    if include_untouched:
-        probe = s_ren.withColumn("__s_present", F.lit(True)).join(
-            current, key, "full"
-        )
-        return probe.withColumn(
-            "change_type",
-            F.when(
-                F.col("__s_present").isNull(), F.lit(CHANGE_UNTOUCHED)
-            ).otherwise(routing),
-        ).drop("__s_present")
-    build = F.broadcast(current) if broadcast_dim else current
-    probe = s_ren.join(build, key, "left")
+    probe = s_ren.join(F.broadcast(current), key, "left")
     return probe.withColumn("change_type", routing)
 
 
@@ -218,7 +192,6 @@ def scd2_apply(
     current_col: str = "is_current",
     sk_strategy: str = "hash",
     date_type: str = "date",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Apply one staging snapshot to an SCD2 dimension; returns the rebuilt
     dimension (same schema/column order as `dim`).
@@ -233,28 +206,16 @@ def scd2_apply(
     # each classify and each insert a current version (invariant breach)
     staging = dedupe_staging(staging, key, attrs)
 
-    # The downstream branches (unchanged/T1/T2-close/fresh, + untouched
-    # on the fold path) filter this same join result — pin it or the
-    # staging⟗dim probe join runs once per branch (spill-capable, never
-    # recompute; released at the next registry query, cache.py).
-    #
-    # Probe shape is picked DELIBERATELY per guide §3 (r12): a FULL
-    # OUTER join can never broadcast, so folding the `untouched` slice
-    # into the probe only wins when the probe already had to shuffle —
-    # i.e. when the dimension outgrows the broadcast threshold
-    # (broadcast_dim=False), where ONE full-outer key-shuffle join
-    # replaces TWO (probe + anti) and halves the probe shuffles. With a
-    # broadcastable dim the classic shape is strictly better: probe and
-    # anti-join both broadcast (ZERO shuffles, fact-free plans keep
-    # their no-SMJ invariant — tests/test_plan_regressions.py g8/g8b/
-    # dq10 guard exactly this), at the cost of a second scan of two
-    # already-small inputs. The r12 full suite caught the unconditional
-    # fold regressing those three guarded plans; it is now scoped.
+    # The downstream branches (unchanged/T1/T2-close/fresh) filter this
+    # same join result — pin it or the staging⟕dim probe join runs once
+    # per branch (spill-capable, never recompute; released at the next
+    # registry query, cache.py). Probe and the untouched anti-join both
+    # broadcast, so a fact-free apply plans ZERO shuffles
+    # (tests/test_plan_regressions.py g8/g8b/dq10 guard exactly this).
     from ..cache import pin
 
     classified = pin(scd_classify(
         dim, staging, key, t1_cols, t2_cols, fixed_cols, sk_col, current_col,
-        broadcast_dim=broadcast_dim, include_untouched=not broadcast_dim,
     ))
 
     def project(df: DataFrame, overrides: dict[str, Column]) -> DataFrame:
@@ -263,17 +224,11 @@ def scd2_apply(
         )
 
     history = dim.filter(~F.col(current_col))
-    if broadcast_dim:
-        # broadcast regime: untouched = current dim keys staging never
-        # mentions, via a broadcastable anti-join (staging keys are the
-        # small side by construction here)
-        untouched = dim.filter(F.col(current_col)).join(
-            staging.select(key).distinct(), key, "left_anti"
-        ).select(*dim_cols)
-    else:
-        untouched = project(
-            classified.filter(F.col("change_type") == CHANGE_UNTOUCHED), {}
-        )
+    # untouched = current dim keys staging never mentions (SSIS only
+    # routes incoming rows); staging keys are the small side
+    untouched = dim.filter(F.col(current_col)).join(
+        staging.select(key).distinct(), key, "left_anti"
+    ).select(*dim_cols)
 
     unchanged = project(classified.filter(F.col("change_type") == CHANGE_NONE), {})
     t1_updated = project(
@@ -655,7 +610,6 @@ def bitemporal_apply(
     fixed_cols: Sequence[str] = (),
     asof: str = "1970-01-01",
     date_type: str = "date",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Apply one staging snapshot to a BITEMPORAL dimension at
     transaction time `asof` (Snodgrass/Jensen two-axis model): valid
@@ -698,7 +652,6 @@ def bitemporal_apply(
     cls = pin(scd_classify(
         dim2, staging, key, t1_cols, t2_cols, fixed_cols,
         sk_col="valid_from", current_col="__open",
-        broadcast_dim=broadcast_dim,
     ))
 
     asof_d = F.lit(asof).cast(date_type)

@@ -19,32 +19,28 @@ def forward_fill(
     df: DataFrame,
     order_by: Sequence[str],
     target: str,
-    partition_by: Sequence[str] | None = None,
     single_task: bool = False,
 ) -> DataFrame:
     """E1 — forward-fill nulls in `target` in `order_by` order.
 
     The reference computes the global fill as ONE unpartitioned window
-    (pyspark_dag2.py:375-379) — a single-task sort. With
-    `partition_by=None` this keeps those exact semantics but executes
-    them through the distributed two-pass range-bucket algorithm
-    (forward_fill_scalable): for a TOTAL order key the two are
-    equivalent row-for-row (the oracle checks it), and the fill stage
-    runs as many tasks as buckets instead of one (VERDICT r5 item 6).
-    `single_task=True` forces the literal reference plan for parity
-    demos. Pass `partition_by` to shard the window when the fill key is
-    contained within a partition key (e.g. fill project_name within
-    project_id).
+    (pyspark_dag2.py:375-379) — a single-task sort. This keeps those
+    exact semantics but executes them through the distributed two-pass
+    range-bucket algorithm (forward_fill_scalable): for a TOTAL order
+    key the two are equivalent row-for-row (the oracle checks it), and
+    the fill stage runs as many tasks as buckets instead of one
+    (VERDICT r5 item 6). `single_task=True` runs the literal reference
+    plan — the reference the tests compare against.
 
     Under a NON-total order key ties make `last(ignorenulls)` order-
     dependent in both shapes — the single-task plan is just as
     nondeterministic there, so the delegation loses nothing.
     """
-    if partition_by is None and not single_task:
+    if not single_task:
         return forward_fill_scalable(df, order_by, target)
-    w = (
-        Window.partitionBy(*partition_by) if partition_by else Window.partitionBy()
-    ).orderBy(*order_by).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w = Window.orderBy(*order_by).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
     return df.withColumn(target, F.last(target, ignorenulls=True).over(w))
 
 
@@ -69,7 +65,15 @@ def forward_fill_scalable(
     Equivalent to the global window for a total order key; shuffle cost is
     one ordered partitioning instead of a 1-task sort.
 
-    `bucketer` picks how the ordered buckets are formed:
+    The carry is the filled value on the bucket's last row IN THE ORDER
+    THE FILL USED: `max_by(target, __rn)`, with `__rn` a row_number over
+    the fill's own partition+sort (one Sort, one Window node). A max_by
+    on the raw order key would pick an arbitrary row of a tied final key
+    group and diverge on mixed-value ties at bucket boundaries (caught by
+    the sf0.01 oracle at a duplicated (orderkey, linenumber)).
+
+    `bucketer` picks how the ordered buckets are formed; it changes only
+    the `__bucket` expression and whether the filled frame is pinned:
 
     - "range" (default, any key type / any distribution):
       `repartitionByRange` — percentile split points from the range
@@ -77,7 +81,8 @@ def forward_fill_scalable(
       ANY key distribution. Costs one extra execution of the input
       (the sampler) and a persist barrier: the sampled partition id is
       nondeterministic across executions, so the filled frame must be
-      pinned before the carry aggregate reads it.
+      pinned before the carry aggregate reads it (an unpinned diamond
+      would also scan and range-shuffle the source twice).
     - "affine" (leading order key integral AND roughly uniform — a
       data contract the caller owns): bucket = floor((v - min(v)) *
       B / span), a deterministic column expression, monotone in v
@@ -92,16 +97,14 @@ def forward_fill_scalable(
       planner reuses one exchange (ReusedExchange with AQE off; the AQE
       stage cache at runtime) and the carry re-reads that shuffle
       output instead of a persisted copy of the filled frame. Under a
-      skewed key the
-      buckets go unbalanced (worst case: the global window's own
-      1-task shape) — that is why "range" stays the default and the
-      affine form is opt-in per call site.
+      skewed key the buckets go unbalanced (worst case: the global
+      window's own 1-task shape) — that is why "range" stays the
+      default and the affine form is opt-in per call site.
     """
     if num_buckets is None:
         num_buckets = 2 * int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
         )
-    okey = F.struct(*[F.col(c) for c in order_by])
     if bucketer == "affine":
         key = order_by[0]
         bounds = df.select(F.min(key).alias("lo"), F.max(key).alias("hi")).first()
@@ -121,57 +124,24 @@ def forward_fill_scalable(
             "__bucket",
             F.when(F.col(key).isNull(), F.lit(-1)).otherwise(bucket_expr),
         )
-        local_w = (
-            Window.partitionBy("__bucket")
-            .orderBy(*order_by)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        # __rn shares local_w's partition+sort (one Sort, one Window
-        # node) and gives the carry a TOTAL tie-break: under duplicate
-        # order keys the carry must be the filled value at the bucket's
-        # last row IN THE ORDER THE FILL USED (the oracle's stable scan
-        # order) — a max_by on the raw key would pick an arbitrary row
-        # of the tied group and diverge on mixed-value ties at bucket
-        # boundaries (caught by the sf0.01 oracle at a duplicated
-        # (orderkey, linenumber)).
-        rank_w = Window.partitionBy("__bucket").orderBy(*order_by)
-        filled_local = bucketed.withColumn(
-            target, F.last(target, ignorenulls=True).over(local_w)
-        ).withColumn("__rn", F.row_number().over(rank_w))
-        # No pin: the bucket id is a pure function of the row, so both
-        # consumers hash-shuffle the identical subtree (one reusable
-        # exchange) and any re-execution reproduces the same buckets —
-        # unlike the sampled range split, which is why the range branch
-        # must persist.
-        carries = filled_local.groupBy("__bucket").agg(
-            F.max_by(F.col(target), F.col("__rn")).alias("__carry")
-        )
-        filled_local = filled_local.drop("__rn")
     else:
         bucketed = df.repartitionByRange(num_buckets, *order_by).withColumn(
             "__bucket", F.spark_partition_id()
         )
-        local_w = (
-            Window.partitionBy("__bucket")
-            .orderBy(*order_by)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        # Diamond DAG: filled_local feeds BOTH the output branch and the
-        # carry aggregation — pin it or the source is scanned and
-        # range-shuffled twice (visible as two parallel Scan->Exchange->
-        # Window subtrees in the un-pinned plan), and the two executions
-        # may draw DIFFERENT sampled range splits.
+    rank_w = Window.partitionBy("__bucket").orderBy(*order_by)
+    local_w = rank_w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    filled_local = bucketed.withColumn(
+        target, F.last(target, ignorenulls=True).over(local_w)
+    ).withColumn("__rn", F.row_number().over(rank_w))
+    if bucketer != "affine":
         from ..cache import pin
 
-        filled_local = pin(bucketed.withColumn(
-            target, F.last(target, ignorenulls=True).over(local_w)
-        ))
-        # Bucket carry = the filled value on the bucket's last row (null
-        # only if the whole bucket saw no non-null). num_buckets rows —
-        # trivially small.
-        carries = filled_local.groupBy("__bucket").agg(
-            F.max_by(F.col(target), okey).alias("__carry")
-        )
+        filled_local = pin(filled_local)
+    # num_buckets rows — trivially small; null only if the whole bucket
+    # saw no non-null
+    carries = filled_local.groupBy("__bucket").agg(
+        F.max_by(F.col(target), F.col("__rn")).alias("__carry")
+    )
     prev_w = (
         Window.orderBy("__bucket")
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -182,7 +152,7 @@ def forward_fill_scalable(
     return (
         filled_local.join(F.broadcast(carries), "__bucket", "left")
         .withColumn(target, F.coalesce(F.col(target), F.col("__carry_prev")))
-        .drop("__bucket", "__carry_prev")
+        .drop("__bucket", "__rn", "__carry_prev")
     )
 
 

@@ -132,7 +132,6 @@ def standardize_stage(
 def encode_stage(
     df: DataFrame,
     bk_maps: Mapping[str, Mapping[str, int]],
-    forward_fill_project_names: bool = True,
 ) -> DataFrame:
     """B6 fill + B7 BK encodes + E1 forward-fill + B8 derived amounts.
 
@@ -141,8 +140,7 @@ def encode_stage(
     out = cleaning.fill_nulls(df, "not_specified", ["borrower", "guarantor"])
     for src, mapping in bk_maps.items():
         out = cleaning.map_encode(out, dict(mapping), source=src, dest=f"{src}_bk")
-    if forward_fill_project_names:
-        out = forward_fill(out, ["loan_number"], "project_name_")
+    out = forward_fill(out, ["loan_number"], "project_name_")
     out = cleaning.derived_sum(out, "repaid", ["repaid_to_ibrd", "repaid_3rd_party"],
                                drop_inputs=True)
     out = cleaning.derived_sum(out, "due", ["due_to_ibrd", "due_3rd_party"],

@@ -226,8 +226,7 @@ def scd2_merge(
     spark: SparkSession, root: str, staging: DataFrame, *,
     t1_cols: Sequence[str] = (), t2_cols: Sequence[str] = (),
     fixed_cols: Sequence[str] = (), asof: str = "1970-01-01",
-    date_type: str = "date",
-    broadcast_dim: bool = True, manifest_extra: dict | None = None,
+    date_type: str = "date", manifest_extra: dict | None = None,
 ) -> dict:
     """Execute one SCD2 merge as a bucket-level copy-on-write commit.
 
@@ -256,7 +255,7 @@ def scd2_merge(
         old_slice, staging, key,
         t1_cols=t1_cols, t2_cols=t2_cols, fixed_cols=fixed_cols,
         asof=asof, sk_col=sk_col, sk_strategy="hash",
-        date_type=date_type, broadcast_dim=broadcast_dim,
+        date_type=date_type,
     )
     version = _next_version(root)
     files = _write_commit(spark, root, new_slice, key, n_buckets, version)

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from etl_pipline_ibrd_loan_system_spark.operators.setops import union_pages
 from etl_pipline_ibrd_loan_system_spark.operators.star import (
@@ -20,39 +21,47 @@ def _sparse_df(spark, n=500, gap=7):
     return spark.createDataFrame(rows, ["k", "val"])
 
 
-def test_forward_fill_matches_scalable(spark):
+@pytest.mark.parametrize("bucketer", ["range", "affine"])
+def test_forward_fill_matches_scalable(spark, bucketer):
     df = _sparse_df(spark)
-    a = forward_fill(df, ["k"], "val").orderBy("k").collect()
-    b = forward_fill_scalable(df, ["k"], "val", num_buckets=8).orderBy("k").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-
-def test_forward_fill_affine_matches_range(spark):
-    df = _sparse_df(spark)
-    a = forward_fill_scalable(df, ["k"], "val", num_buckets=8).orderBy("k").collect()
+    a = forward_fill(df, ["k"], "val", single_task=True).orderBy("k").collect()
     b = (
-        forward_fill_scalable(df, ["k"], "val", num_buckets=8, bucketer="affine")
+        forward_fill_scalable(df, ["k"], "val", num_buckets=8, bucketer=bucketer)
         .orderBy("k")
         .collect()
     )
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
-def test_forward_fill_affine_carry_uses_fill_order_on_tied_boundary(spark):
+@pytest.mark.parametrize("bucketer", ["range", "affine"])
+def test_forward_fill_carry_uses_fill_order_on_tied_boundary(spark, bucketer):
     """Regression for the sf0.01 oracle catch: a DUPLICATED order key
     with differing non-null values sitting on a bucket's last row must
     hand the next bucket's leading nulls the value the fill itself saw
-    last (stable scan order), not the max value of the tied group.
-    keys 0..9 with num_buckets=5 put the bucket boundary between 5 and
-    6; k=5 is duplicated ('R' first, 'N' second in scan order), k=6 is
-    null and must fill to 'N'."""
+    last (stable scan order), not an arbitrary row of the tied group.
+    keys 0..9 with num_buckets=5 put a bucket boundary between 5 and 6
+    under both bucketers; k=5 is duplicated ('R' first, 'N' second in
+    scan order), k=6 is null and must fill to 'N'."""
     rows = [(0, "a"), (1, None), (2, "b"), (3, None), (4, "c"),
             (5, "R"), (5, "N"), (6, None), (7, None), (8, "d"), (9, None)]
     df = spark.createDataFrame(rows, ["k", "val"]).coalesce(1)
+    if bucketer == "range":
+        # the sampled split points must leave k=5 as its bucket's last
+        # key, or the case would not cross a bucket boundary
+        part = {
+            r.k: r.p
+            for r in df.repartitionByRange(5, "k")
+            .select("k", F.spark_partition_id().alias("p"))
+            .collect()
+        }
+        assert max(k for k in part if part[k] == part[5]) == 5
+        assert part[6] != part[5]
     got = forward_fill_scalable(
-        df, ["k"], "val", num_buckets=5, bucketer="affine"
+        df, ["k"], "val", num_buckets=5, bucketer=bucketer
     )
+    ref = forward_fill(df, ["k"], "val", single_task=True)
     vals = {r.k: r.val for r in got.collect() if r.k != 5}
+    assert vals == {r.k: r.val for r in ref.collect() if r.k != 5}
     assert vals == {0: "a", 1: "a", 2: "b", 3: "b", 4: "c",
                     6: "N", 7: "N", 8: "d", 9: "d"}
     assert sorted(r.val for r in got.collect() if r.k == 5) == ["N", "R"]

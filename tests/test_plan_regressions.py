@@ -86,6 +86,24 @@ def test_e1b_affine_fill_has_no_sampler_and_no_pin(spark, sf_dir, registry):
     assert "InMemoryTableScan" not in plan, (
         "e1b re-grew a persist barrier"
     )
+    # Without the pin, the carry matches the fill on tied keys only
+    # because both read ONE __bucket shuffle: the AQE-final plan must
+    # execute a single bucket exchange and reuse it for the carry.
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    bucket_exchanges = [
+        line for line in final.splitlines()
+        if "Exchange hashpartitioning(__bucket" in line
+        and "ReusedExchange" not in line
+    ]
+    assert len(bucket_exchanges) == 1, (
+        "e1b's fill and carry no longer share one bucket exchange"
+    )
+    assert "ReusedExchange" in final, (
+        "e1b's carry re-shuffles instead of reusing the fill's exchange"
+    )
 
 
 def test_tx7_no_window_exec(spark, sf_dir, registry):

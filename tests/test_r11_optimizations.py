@@ -85,7 +85,9 @@ def test_grouped_pairgen_matches_self_join(spark, sf_dir):
     """lsh_candidate_pairs (grouped one-pass form) == the self-join it
     replaced, on real signatures with cross-band duplicate collisions."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sh = dedup.word_shingles(docs, "text", "doc_id", 3)
+    sh = dedup.word_shingles(docs, "text", "doc_id", 3).select(
+        "doc_id", F.transform("shingles", lambda s: F.xxhash64(s)).alias("shingles")
+    )
     sigs = dedup.minhash_signatures(sh, "doc_id", 16).persist()
     try:
         got = dedup.lsh_candidate_pairs(

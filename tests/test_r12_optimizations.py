@@ -172,10 +172,10 @@ def test_hashed_shingle_minhash_matches_string_form(spark, sf_dir):
 
 
 def test_arrow_minhash_kernel_matches_sql_aggregation(spark, sf_dir):
-    """minhash_signatures(prehashed=True) — now one Arrow kernel — must be
-    bit-equal to the exploded groupBy-min SQL aggregation it replaced,
-    including negative xxhash64 values (pmod wrap) and single-shingle
-    docs."""
+    """minhash_signatures — one Arrow kernel — must be bit-equal to the
+    exploded groupBy-min SQL aggregation it replaced, including negative
+    xxhash64 values (pmod wrap), single-shingle docs and a NULL shingle
+    array (no row, as explode emits none)."""
     from etl_pipline_ibrd_loan_system_spark.operators.dedup import (
         MINHASH_P,
         minhash_signatures,
@@ -186,9 +186,10 @@ def test_arrow_minhash_kernel_matches_sql_aggregation(spark, sf_dir):
         (1, [-9223372036854775808, -1, 0, 1, 9223372036854775807]),
         (2, [42]),                      # single shingle
         (3, [-(2**62), 2**62, 17, 17]),  # duplicate hash values
+        (4, None),                      # NULL shingle array
     ]
     sh = spark.createDataFrame(rows, "doc_id long, shingles array<bigint>")
-    got = _rows(minhash_signatures(sh, "doc_id", k=8, prehashed=True))
+    got = _rows(minhash_signatures(sh, "doc_id", k=8))
     # reference: the SQL aggregation form (rebuilt inline, as it was)
     h = sh.select("doc_id", F.explode("shingles").alias("s")).select(
         "doc_id", F.pmod(F.col("s"), F.lit(MINHASH_P)).alias("h")
@@ -203,7 +204,7 @@ def test_arrow_minhash_kernel_matches_sql_aggregation(spark, sf_dir):
     empty = spark.createDataFrame(
         [(9, [])], "doc_id long, shingles array<bigint>"
     )
-    assert minhash_signatures(empty, "doc_id", k=4, prehashed=True).count() == 0
+    assert minhash_signatures(empty, "doc_id", k=4).count() == 0
 
 
 def test_pair_payload_once_matches_two_join_form(spark):
@@ -293,104 +294,3 @@ def test_salted_allpairs_calibration_matches_plain_join(spark, sf_dir):
     got, want = _rows(salted), _rows(plain)
     assert got == want
     assert got  # non-degenerate
-
-
-def test_full_outer_classify_matches_anti_join_form(spark):
-    """scd_classify(include_untouched=True) == the left-join classify
-    plus separate anti-join it folded away — including NULL staging
-    attrs (presence must come from the marker, not attr nullness), a
-    NULL staging key, and keys present on only one side."""
-    from pyspark.sql import functions as F
-
-    from etl_pipline_ibrd_loan_system_spark.operators import scd
-
-    dim = spark.createDataFrame(
-        [
-            (1, "k1", "a", "x", "2020-01-01", None, True),
-            (2, "k2", "b", "y", "2020-01-01", None, True),
-            (9, "k2", "old", "y", "2019-01-01", "2020-01-01", False),
-            (3, "k3", None, "z", "2020-01-01", None, True),  # null attr in dim
-            (4, "k4", "d", "w", "2020-01-01", None, True),  # untouched
-        ],
-        "sk long, k string, t2a string, t1a string, start_date string, end_date string, is_current boolean",
-    )
-    staging = spark.createDataFrame(
-        [
-            ("k1", "a", "x"),      # unchanged
-            ("k2", "B", "y"),      # t2 change
-            ("k3", None, "zz"),    # t1 change with null t2 attr both sides
-            ("k5", None, None),    # new key, all-null attrs
-            (None, "n", "n"),      # null staging key -> new
-        ],
-        "k string, t2a string, t1a string",
-    )
-    got = scd.scd_classify(
-        dim, staging, "k", t1_cols=["t1a"], t2_cols=["t2a"],
-        include_untouched=True,
-    )
-    # reference: old left-join classify + anti-join untouched slice
-    ref_cls = scd.scd_classify(
-        dim, staging, "k", t1_cols=["t1a"], t2_cols=["t2a"]
-    )
-    current = dim.filter(F.col("is_current"))
-    ref_untouched = current.join(
-        staging.select("k").distinct(), "k", "left_anti"
-    )
-    def _k(rows):
-        return sorted(rows, key=repr)
-
-    got_untouched = got.filter(F.col("change_type") == scd.CHANGE_UNTOUCHED)
-    assert _k(
-        (r["sk"], r["k"]) for r in got_untouched.collect()
-    ) == _k((r["sk"], r["k"]) for r in ref_untouched.collect())
-    got_rest = got.filter(F.col("change_type") != scd.CHANGE_UNTOUCHED).select(
-        *ref_cls.columns
-    )
-    assert _k(map(tuple, got_rest.collect())) == _k(
-        map(tuple, ref_cls.collect())
-    )
-    # the null-key staging row classifies as NEW on both paths
-    assert [
-        r["change_type"] for r in got.filter(F.col("k").isNull()).collect()
-    ] == [scd.CHANGE_NEW]
-
-
-def test_scd2_apply_probe_regimes_agree(spark):
-    """scd2_apply picks its probe shape by broadcast_dim (r12, guide §3):
-    broadcastable dims keep the zero-shuffle probe + anti-join pair,
-    unbroadcastable dims take the folded full-outer classify. Both
-    regimes must rebuild the identical dimension."""
-    from pyspark.sql import functions as F
-
-    from etl_pipline_ibrd_loan_system_spark.cache import release_pinned
-    from etl_pipline_ibrd_loan_system_spark.operators import scd
-
-    dim = spark.createDataFrame(
-        [
-            (1, "k1", "a", "x", "2020-01-01", None, True),
-            (2, "k2", "b", "y", "2020-01-01", None, True),
-            (9, "k2", "old", "y", "2019-01-01", "2020-01-01", False),
-            (4, "k4", "d", "w", "2020-01-01", None, True),  # untouched
-        ],
-        "sk long, k string, t2a string, t1a string, start_date string, end_date string, is_current boolean",
-    )
-    staging = spark.createDataFrame(
-        [("k1", "a", "x"), ("k2", "B", "y"), ("k5", None, None)],
-        "k string, t2a string, t1a string",
-    )
-    outs = []
-    for bd in (True, False):
-        out = scd.scd2_apply(
-            dim, staging, key="k", t1_cols=["t1a"], t2_cols=["t2a"],
-            asof="2024-01-01", sk_col="sk", sk_strategy="hash",
-            date_type="string", broadcast_dim=bd,
-        )
-        outs.append(sorted(map(tuple, out.collect())))
-        release_pinned()
-        # regime proof: the folded probe (and its SMJ) exists ONLY on
-        # the unbroadcastable path
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert ("SortMergeJoin FullOuter" in plan or "FullOuter" in plan) == (
-            not bd
-        ), f"broadcast_dim={bd} got unexpected probe shape"
-    assert outs[0] == outs[1]

@@ -138,6 +138,64 @@ def test_hash_sk_strategy_distributed(spark, dims):
     assert dim1.filter("is_current").count() == 5
 
 
+def test_null_key_and_null_attrs_classify_and_apply(spark):
+    """The broadcast probe on NULL edges: a NULL staging key matches no
+    current row and routes `new`; attrs compare null-safely, so NULL on
+    both sides is no change (k3's t2a, all of k6). The rebuild inserts
+    the NULL-key row as a current version and keeps the key staging
+    never mentions (k4)."""
+    dim = spark.createDataFrame(
+        [
+            (1, "k1", "a", "x", "2020-01-01", None, True),
+            (2, "k2", "b", "y", "2020-01-01", None, True),
+            (9, "k2", "old", "y", "2019-01-01", "2020-01-01", False),
+            (3, "k3", None, "z", "2020-01-01", None, True),  # null attr in dim
+            (4, "k4", "d", "w", "2020-01-01", None, True),  # untouched
+            (6, "k6", None, None, "2020-01-01", None, True),  # all-null attrs
+        ],
+        "sk long, k string, t2a string, t1a string, start_date string,"
+        " end_date string, is_current boolean",
+    )
+    staging = spark.createDataFrame(
+        [
+            ("k1", "a", "x"),      # unchanged
+            ("k2", "B", "y"),      # t2 change
+            ("k3", None, "zz"),    # t1 change with null t2 attr both sides
+            ("k5", None, None),    # new key, all-null attrs
+            ("k6", None, None),    # all-null attrs both sides: unchanged
+            (None, "n", "n"),      # null staging key -> new
+        ],
+        "k string, t2a string, t1a string",
+    )
+    kw = dict(key="k", t1_cols=["t1a"], t2_cols=["t2a"])
+    routed = {
+        r.k: r.change_type
+        for r in scd_classify(dim, staging, **kw).collect()
+    }
+    assert routed == {
+        "k1": "unchanged", "k2": "t2", "k3": "t1", "k5": "new",
+        "k6": "unchanged", None: "new",
+    }
+    out = scd2_apply(
+        dim, staging, asof="2024-01-01", sk_strategy="hash",
+        date_type="string", **kw,
+    )
+    cur = {
+        r.k: (r.t2a, r.t1a, r.start_date)
+        for r in out.filter("is_current").collect()
+    }
+    assert cur == {
+        "k1": ("a", "x", "2020-01-01"),
+        "k2": ("B", "y", "2024-01-01"),
+        "k3": (None, "zz", "2020-01-01"),
+        "k4": ("d", "w", "2020-01-01"),
+        "k5": (None, None, "2024-01-01"),
+        "k6": (None, None, "2020-01-01"),
+        None: ("n", "n", "2024-01-01"),
+    }
+    assert out.count() == 9  # 7 current + k2's closed and prior history
+
+
 # ---- MERGE INTO twin (production path on Delta/Iceberg) ----------------
 
 MERGE_KW = dict(
