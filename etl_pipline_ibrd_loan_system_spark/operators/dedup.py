@@ -271,9 +271,13 @@ def _pair_payload_once(
 
     Pair-side payloads come back as structs `a`/`b` (side 0 = id_a);
     pairs whose ids lack a payload row drop, exactly like the inner
-    two-join form. The payload side stays shuffle-hash-hinted: never
-    broadcast a corpus-grain array relation (sf10 OOM landmine, r7); the
-    16-byte edge side is free to broadcast if AQE sizes it small."""
+    two-join form. Preconditions are asserted in the same aggregate, not
+    assumed: a pair listed twice, or an id with two payload rows, fails
+    the query (raise_error) instead of dropping the pair or pairing one
+    side's payload with itself. The payload side stays
+    shuffle-hash-hinted: never broadcast a corpus-grain array relation
+    (sf10 OOM landmine, r7); the 16-byte edge side is free to broadcast
+    if AQE sizes it small."""
     pay = F.struct(*[F.col(c) for c in payload_cols])
     edges = pairs.select(
         F.explode(
@@ -303,9 +307,24 @@ def _pair_payload_once(
             F.min_by("__pay", "__side").alias("a"),
             F.max_by("__pay", "__side").alias("b"),
             F.count(F.lit(1)).alias("__n"),
+            F.min("__side").alias("__s0"),
+            F.max("__side").alias("__s1"),
         )
-        .where(F.col("__n") == 2)  # both sides present (inner-join parity)
-        .drop("__n")
+        # __n == 1: one side lacks a payload -> drop (inner-join parity);
+        # __n == 2 must be one row per side; more means a duplicated pair
+        # or payload id
+        .where(
+            F.when(
+                (F.col("__n") > 2)
+                | ((F.col("__n") == 2) & (F.col("__s0") == F.col("__s1"))),
+                F.raise_error(F.format_string(
+                    "_pair_payload_once: pair (%s, %s) met %d payload rows "
+                    "on sides %d..%d; pairs and payload ids must be unique",
+                    "id_a", "id_b", "__n", "__s0", "__s1",
+                )),
+            ).otherwise(F.col("__n") == 2)
+        )
+        .drop("__n", "__s0", "__s1")
     )
 
 

@@ -9,6 +9,14 @@ Column-name contract: every computed column is aliased identically in the
 Spark plan and the oracle SQL (the driver sorts columns by name before
 hashing). Float aggregates go through functions.exact so both engines
 produce bit-identical doubles.
+
+Registry order is the driver's verification order: the driver checks the
+first 50 entries each round and writes CORRECTNESS_rNN.json. load_registry()
+sorts by the round of each query's newest CORRECTNESS row when that row is
+green, and puts queries with no row or a red newest row first; ties keep
+registration order. The driver's first 50 are thus always the
+least-recently-verified queries, and the whole registry rotates through
+it with no hand-kept schedule.
 """
 
 from __future__ import annotations
@@ -30,347 +38,15 @@ REGISTRY_ERRORS: dict[str, str] = {}
 # oracle; keep it that way unless genuinely impossible.
 ROWS_ONLY: frozenset[str] = frozenset()
 
-# The driver's correctness gate checks the FIRST 50 registry entries (every
-# recorded round stopped at exactly entry 50 regardless of per-query cost).
-#
-# ROUND-9 CHANGE (VERDICT r8 items 1+2): DRIVER_PRIORITY is no longer a
-# hand-rotated constant — it is DERIVED at import time from the newest
-# CORRECTNESS_r*.json files: the active window is the EARLIEST
-# ROTATION_PLAN round that still contains a query without a GREEN driver
-# row (red rows never retire a query). The moment a round's rows land in
-# the repo, the window advances by construction — the suite can no longer
-# go red at judging time on a purely mechanical "rotate now" tripwire.
-# Spare slots (a window shorter than 50) are filled first with
-# never-driver-checked names from later windows (retiring rows early),
-# then with already-green names for re-verification.
-#
-# ROTATION_PLAN is the recorded schedule for the remainder (r9: sampling/
-# mixing/feature + the metrics mart; r10: the e-series analytics tail,
-# sketches, graph/linkage remainder + displacements; r11: overflow for
-# late registrations past r10's 50-slot cap). The staleness lint
-# (tools/selfcheck.py and tests/test_entry.py) fails the suite if
-# any registered query is neither GREEN-driver-checked nor scheduled, or
-# if DRIVER_PRIORITY deviates from the derived window — the registry can
-# no longer outgrow its driver-verification schedule silently. (Newly
-# registered queries must be hand-appended to the earliest non-full
-# window; the lint only enforces that they are scheduled SOMEWHERE.)
-#
-# Window 8 (shipped in CORRECTNESS_r08.json, 50/50 green): the asof/shape/
-# dedup-tail/retrieval/text/ANN/streaming families, plus the q12/dq12
-# re-queue (r7 HUGEINT oracle-typing reds, both green r8) and the
-# pulled-forward collapse twins dd3b/dd7b.
-_ROTATION_PLAN_8: tuple[str, ...] = (
-    "j1c_asof_forward",
-    "j1d_asof_nearest",
-    "e16_time_range_rolling",
-    "q12_late_lines_by_status",
-    "dq12_profile_drift",
-    "e7_pivot_status_by_year",
-    "m8_rollup_status_priority",
-    "f8_token_set_ops",
-    "d16_weighted_median",
-    "d17_group_mode",
-    "f12_multiset_setops",
-    "d16b_weighted_median_binned",
-    "b16_row_checksums",
-    "f13_relational_division",
-    "b17_penny_allocation",
-    "sql2_shared_analytic_dialect",
-    "g2_dim_snapshot_asof",
-    "dd3b_neardup_after_exact_collapse",
-    "dd7b_vector_dedup_collapsed",
-    "dd9_boilerplate_chunks",
-    "dd10_cluster_representatives",
-    "dd11_sorted_neighborhood",
-    "dd12_verbatim_overlap",
-    "dd14_phonetic_blocking",
-    "dd15_containment_pairs",
-    "tx15_bigram_familiarity",
-    "iv1_inverted_index",
-    "iv2_bm25_topk",
-    "tx16_chi2_terms",
-    "tx17_keyword_in_context",
-    "fv1_hashing_tf",
-    "tx18_unicode_normalize",
-    "tx19_gopher_rules",
-    "iv3_phrase_search",
-    "u2_content_defined_chunks",
-    "tx20_textrank_keywords",
-    "tx22_kneser_ney_counts",
-    "iv4_proximity_search",
-    "tx23_ngram_novelty",
-    "tx24_readability",
-    "iv5_boolean_retrieval",
-    "tx26_encoding_screen",
-    "sm3_int8_topk",
-    "rp1_random_projection",
-    "rp2_jl_rerank_topk",
-    "sm6_knn_classify",
-    "s3_session_window_stream",
-    "s2_stream_static_enrich",
-    "s4_watermark_late_drop",
-    "ss2_stream_stream_left_outer",
-)
-
-# Recorded driver-window schedule (VERDICT r6 item 1: every
-# never-driver-checked query gets a planned slot; 50/round is the
-# driver's measured bandwidth). Queries registered AFTER this plan was
-# cut must be appended to the earliest non-full window by the author —
-# the staleness lint enforces it.
-ROTATION_PLAN: dict[int, tuple[str, ...]] = {
-    # r7's shipped window, recorded as a literal (historical — its rows are
-    # in CORRECTNESS_r07.json). q12/dq12 are NOT listed here: their r7 rows
-    # were red (oracle HUGEINT typing) and they are re-queued in window 8 —
-    # under the green-only lint a window listing them would never retire.
-    7: (
-        "q1_pricing_summary",
-        "g1_scd2_apply",
-        "c2_lookup_cascade",
-        "sm4_mmr_diversified_topk",
-        "g7_snapshot_table_merge",
-        "g7b_merged_dim_timetravel",
-        "q2_min_cost_supplier",
-        "q4_order_priority",
-        "q6_forecast_revenue",
-        "q7_volume_shipping",
-        "q8_market_share",
-        "q9_product_profit",
-        "q10_returned_items",
-        "q11_important_part_value",
-        "q13_customer_order_distribution",
-        "q14_promo_revenue",
-        "q15_top_supplier",
-        "q16_supplier_part_counts",
-        "q17_small_quantity_revenue",
-        "q18_large_volume_customer",
-        "q19_disjunctive_revenue",
-        "q20_promotion_supplier",
-        "q21_waiting_supplier",
-        "q22_sales_opportunity",
-        "f9_customers_without_urgent_orders",
-        "c6_cdc_apply",
-        "c10_incremental_join_view",
-        "c11_deletion_cascade",
-        "c12_bitemporal_probe",
-        "c13_scd2_compaction",
-        "g8_pointintime_fact_join",
-        "g8b_pointintime_unbroadcast",
-        "g9_scd3_apply",
-        "g13_period_allocation",
-        "dq1_expectation_checks",
-        "dq2_table_profile",
-        "dq3_group_outliers",
-        "dq5_benford_screen",
-        "dq6_k_anonymity",
-        "dq7_l_diversity",
-        "dq8_cusum_drift",
-        "dq9_fd_discovery",
-        "dq10_temporal_orphans",
-        "dq11_changepoint",
-        "dq13_duplicate_payments",
-        "dq14_coverage_gaps",
-        "dq15_hash_collision_audit",
-        "dq16_scd2_overlap_audit",
-    ),
-    8: _ROTATION_PLAN_8,
-    9: (
-        "sp3_weighted_sample",
-        "sp4_cluster_aware_split",
-        "dc3_decontaminate_aho_corasick",
-        "sp5_exact_stratified_sample",
-        "fb1_quantile_binning",
-        "sp6_temporal_split",
-        "mx3_temperature_flatten",
-        "sp7_negative_sampling",
-        "sp8_kfold_splits",
-        "mx4_budget_apportionment",
-        "sp9_priority_sample",
-        "pk2_ffd_packing",
-        "mx5_apportioned_selection",
-        "sp10_poisson_bootstrap",
-        "sp11_rolling_origin",
-        "sp12_class_balance",
-        "e8_unpivot_part_metrics",
-        "e9_ntile_quartiles",
-        "d13_filtered_aggregates",
-        "m9_ratio_to_report",
-        "f10_embedding_component_stats",
-        "tx14_edit_distance_neighbors",
-        "d14_stats_moments",
-        "e10_funnel_stages",
-        "m10_cohort_retention",
-        "g3_pagerank_trade_graph",
-        "g5_bfs_hops",
-        "m11_rfm_segments",
-        "d15_cube",
-        "m12_market_basket",
-        "m13_pareto_share",
-        "zo1_zorder_layout",
-        "e17_mad_robust_stats",
-        "g6_weighted_shortest_path",
-        "m14_yoy_growth",
-        "fv2_target_encode",
-        "fv3_vector_scale",
-        "m15_market_concentration",
-        "g10_degree_assortativity",
-        "cf1_cosupplier_similarity",
-        "g12_neighborhood_features",
-        "m16_gini_concentration",
-        "m17_ratio_to_parent",
-        "m18_new_vs_returning",
-        "m19_growth_accounting",
-        "cf1b_capped_similarity",
-        "m20_activity_streaks",
-        "m21_interpurchase_gaps",
-        "m22_price_volume_variance",
-    ),
-    10: (
-        "m23_time_to_convert",
-        "g14_personalized_pagerank",
-        "m24_ltv_curve",
-        "u1_char_chunks_udtf",
-        "b15_pii_tokenize",
-        "dq17_langid_agreement",
-        "dq18_weekday_anomaly",
-        "dq19_fixed_attr_violations",
-        "g4_triangle_count",
-        "e11_ewma",
-        "e13_group_regression",
-        "f11_embedding_covariance",
-        "bpe1_pair_merges",
-        "j3_interval_overlap",
-        "e12_event_transitions",
-        "sk6_hll_setops",
-        "e14_sessionize",
-        "e15_rolling_median",
-        "sk7_sliding_hll",
-        "e18_interval_compaction",
-        "e19_linear_interpolate",
-        "e20_running_distinct",
-        "sk8_kmv_intersection",
-        "e21_theil_sen_trend",
-        "e22_ohlc_resample",
-        "j4_grid_neighbor_join",
-        "e23_autocorrelation",
-        "e24_holt_smoothing",
-        "e25_skyline",
-        "e26_seasonal_index",
-        "g11_clustering_coefficient",
-        "e27_rolling_wau",
-        "e28_survival_curve",
-        "e29_sequence_match",
-        "e30_session_sequence_match",
-        "e31_topk_with_ties",
-        "er1_linkage_confusion",
-        "er1b_linkage_tight_blocking",
-        # registered r7 after the plan was cut (earliest non-full window);
-        # dd3b/dd7b were pulled FORWARD into the r8 window (VERDICT r7 #8):
-        "mm7_video_frame_extract",
-        "fv4_linear_quality_score",
-        "sm7_semantic_dedup",
-        "dd8b_clusters_via_collapse",
-        "g7c_snaptable_change_feed",
-        # displaced from the r8 window to make room for q12/dq12/dd3b/dd7b
-        # (each family already has a green driver row or selfcheck sweep):
-        "tx21_symspell_candidates",
-        "s5_stream_scd2_enrich",
-        "s6_stream_corpus_intake",
-        "dc2_substring_decontaminate",
-        # registered r8 (earliest non-full window):
-        "b18_sink_decimal_narrowing",
-        "m25_date_hierarchy_drill",
-        # registered r9 (earliest non-full window): timestamp-grain SCD2
-        # twin of g1 (VERDICT r8 item 5 — last §2.G parity-evidence gap)
-        "g20_scd2_timestamp_grain",
-    ),
-    # overflow window: round-10 hit its 50-slot cap; late-r8
-    # registrations go here (the lint keeps it <= 50 like any window)
-    11: (
-        "dd2b_jaccard_after_collapse",
-        "dd15b_containment_after_collapse",
-        "dd16_duplicate_spans",
-        "dd17_duplicate_token_mass",
-        "fv5_dsir_importance",
-        "iv6_rrf_fusion",
-        "g15_kcore_trade_graph",
-        "zo2_hilbert_layout",
-        "sm8_ann_recall",
-        "sm9_mutual_top1_alignment",
-        "sm10_hard_negatives",
-        "m26_holt_forecast",
-        "tx27_vocab_growth",
-        "dq24_embedding_drift",
-        "m27_amortization_schedule",
-        "fv6_woe_encoding",
-        "g16_label_propagation",
-        "fv7_tfidf_terms",
-        "m28_loan_npv",
-        "er2_fellegi_sunter_fit",
-        "sm11_pq_adc_topk",
-        "dq20_t_closeness",
-        "dq21_mutual_information",
-        "g17_scd6_hybrid",
-        "g18_hyperball_centrality",
-        "iv7_related_terms",
-        "sm12_ivfpq_topk",
-        "dd19_lsh_calibration",
-        "u5_variant_shred",
-        "g18b_effective_diameter",
-        "s7_streaming_hll_distinct",
-        "g19_accumulating_snapshot",
-        "er2b_fs_fit_tight",
-        "m29_vintage_curves",
-        # registered r9 (earliest non-full window):
-        "m30_roll_rates",
-        "m31_interest_accrual",
-        "m32_touch_attribution",
-        "fb2_winsorized_stats",
-        "iv8_rocchio_prf",
-        "dq22_null_pattern_profile",
-        "mx6_epoch_upsampling",
-        "tx28_repetition_signals",
-        "tx29_code_prose_screen",
-        "m33_aging_buckets",
-        "dq23_population_stability",
-        "dd20_dup_mass_report",
-        "u6_fixed_width_parse",
-        "m34_prepayment_speed",
-        # registered r10 (the window's two free slots — VERDICT r9 item 7):
-        "m35_weighted_average_life",
-        "m36_ecl_staging",
-    ),
-    # overflow window for the remaining round-10 registrations (window 11
-    # hit its 50-slot cap); same lint rules as every window
-    12: (
-        "m37_macaulay_duration",
-        "tx30_mojibake_screen",
-        "tx31_pii_density",
-        "tx32_unigram_logppl",
-        "sm13_batch_range_search",
-        "mx7_curriculum_schedule",
-        "fv8_feature_hashing",
-        "u7_logfmt_parse",
-        "m38_payment_waterfall",
-        "e33_time_weighted_average",
-        "m39_rate_shock_revaluation",
-        "iv9_query_likelihood_topk",
-        "u8_csv_recovery",
-        "h4_watermark_loss_audit",
-        "zo3_skipping_audit",
-        # r11: renamed from tx17_c4_line_filter (prefix collision with
-        # tx17_keyword_in_context, same defect class as the r10 dq17
-        # finding) — the green r9 driver row is keyed on the old name,
-        # so the new name re-earns its row here
-        "tx33_c4_line_filter",
-    ),
-}
+_CORRECTNESS_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
 
-def _green_driver_names(repo_root: str | None = None) -> set[str]:
-    """Union of query names with a GREEN row across the repo's
-    CORRECTNESS_r*.json files (rows/schema/hash all match; hash None =
-    rows-only check counts, hash False never does — a red row never
-    retires a query, VERDICT r7 item 2)."""
+def _driver_staleness(repo_root: str | None = None) -> dict[str, int]:
+    """Driver-order key per query name with a CORRECTNESS row: the round
+    of its NEWEST row if that row is green, else -1. Green means rows and
+    schema match and the hash is not False (None = rows-only check).
+    Callers give names with no row -1 too, so a red newest row never
+    retires a query: it sorts with the never-checked names."""
     import glob
     import json
     import os
@@ -378,66 +54,22 @@ def _green_driver_names(repo_root: str | None = None) -> set[str]:
     root = repo_root or os.path.dirname(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
-    seen: set[str] = set()
-    for f in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        try:
-            with open(f, encoding="utf-8") as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
+    newest: dict[str, tuple[int, bool]] = {}
+    for f in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        m = _CORRECTNESS_FILE.fullmatch(os.path.basename(f))
+        if not m:
             continue
-        if not isinstance(rows, dict):
-            continue
+        rnd = int(m.group(1))
+        with open(f, encoding="utf-8") as fh:
+            rows = json.load(fh)
         for name, row in rows.items():
-            if not isinstance(row, dict):
-                seen.add(name)  # legacy shape: presence only
-                continue
-            green = (
-                row.get("rows_match") is True
-                and row.get("schema_match") is True
-                and row.get("hash_match") is not False  # None = rows-only check
-            )
-            if green:
-                seen.add(name)
-    return seen
-
-
-def derive_active_window(repo_root: str | None = None) -> tuple[str, ...]:
-    """The driver window the repo currently owes rows for, derived from
-    the CORRECTNESS files on disk (VERDICT r8 item 2): the EARLIEST
-    ROTATION_PLAN round still holding a query without a green driver
-    row. When every scheduled query is green, the LAST window is kept
-    (stable re-verification set). Windows shorter than 50 are padded to
-    the driver's full bandwidth: never-green scheduled names first (in
-    plan order), then already-green names for re-verification."""
-    seen = _green_driver_names(repo_root)
-    rounds = sorted(ROTATION_PLAN)
-    pending = [r for r in rounds if any(n not in seen for n in ROTATION_PLAN[r])]
-    active = list(ROTATION_PLAN[pending[0]] if pending else ROTATION_PLAN[rounds[-1]])
-    if len(active) < 50:
-        pool = [
-            n for r in rounds for n in ROTATION_PLAN[r] if n not in set(active)
-        ]
-        pool.sort(key=lambda n: n in seen)  # stable: never-green first, plan order
-        for n in pool:
-            if n not in active:
-                active.append(n)
-            if len(active) == 50:
-                break
-    return tuple(active[:50])
-
-
-# Derived, never hand-rotated (VERDICT r8 items 1+2): the moment a
-# round's CORRECTNESS file lands green, the next import sees the next
-# window — green-at-judging-time by construction.
-DRIVER_PRIORITY: tuple[str, ...] = derive_active_window()
-
-
-def _driver_order(d: dict) -> dict:
-    """Stable reorder: DRIVER_PRIORITY names first (those present), then
-    the remaining entries in registration order."""
-    out = {n: d[n] for n in DRIVER_PRIORITY if n in d}
-    out.update((n, v) for n, v in d.items() if n not in out)
-    return out
+            if rnd > newest.get(name, (-1, False))[0]:
+                newest[name] = (rnd, (
+                    row.get("rows_match") is True
+                    and row.get("schema_match") is True
+                    and row.get("hash_match") is not False
+                ))
+    return {n: rnd if green else -1 for n, (rnd, green) in newest.items()}
 
 
 def query(name: str, sql: str | None = None):
@@ -466,69 +98,34 @@ def query(name: str, sql: str | None = None):
     return deco
 
 
-def rotation_lint(repo_root: str | None = None) -> list[str]:
-    """Driver-window staleness lint (VERDICT r6 item 8, tightened r8).
-    Returns the list of violations (empty = clean). Rules:
+def registry_lint() -> list[str]:
+    """Numbering-collision lint; returns the violations (empty = clean).
 
-    1. Every registered query has a GREEN driver row (union of the repo's
-       CORRECTNESS_r*.json, counting only rows whose hash/rows/schema all
-       match — a red row never retires a query, VERDICT r7 item 2) OR a
-       slot in ROTATION_PLAN — a registration can never silently outgrow
-       the verification schedule.
-    2. Every planned window holds <= 50 known, duplicate-free names
-       (50/round is the driver's measured bandwidth).
-    3. DRIVER_PRIORITY must equal derive_active_window() — since r9 the
-       constant IS derived at import time, so this only fires if the
-       CORRECTNESS files changed after import (or someone re-pins the
-       constant by hand); rotation itself needs no manual edit anymore.
-
-    Newly registered queries must be hand-appended to the earliest
-    non-full window; the lint enforces only that they are scheduled
-    somewhere (rule 1), not which window they land in.
+    No two registered names may share a numbering code (`dq17_`, `tx17_`
+    …): ledger greps and humans key on the code, so a collision silently
+    mis-credits driver rows. Letter-suffixed variants (dd3 vs dd3b) are
+    distinct codes by construction.
 
     Call after load_registry() (QUERIES must be populated)."""
-    seen = _green_driver_names(repo_root)
-    problems: list[str] = []
-    scheduled = {n for w in ROTATION_PLAN.values() for n in w}
-    for n in QUERIES:
-        if n not in seen and n not in scheduled:
-            problems.append(
-                f"{n}: never driver-checked and absent from ROTATION_PLAN "
-                "(append it to the earliest non-full window)"
-            )
-    for r, w in ROTATION_PLAN.items():
-        if len(w) > 50:
-            problems.append(f"ROTATION_PLAN[{r}]: {len(w)} names > 50-slot window")
-        if len(set(w)) != len(w):
-            problems.append(f"ROTATION_PLAN[{r}]: duplicate names")
-        unknown = [n for n in w if n not in QUERIES]
-        if unknown:
-            problems.append(f"ROTATION_PLAN[{r}]: unregistered names {unknown}")
-    # rule 4 (r11, generalizing the judge's dq17 finding): no two
-    # registered names may share a numbering code (`dq17_`, `tx17_` …) —
-    # ledger greps and humans key on the code, so a collision silently
-    # mis-credits driver rows. Letter-suffixed variants (dd3 vs dd3b)
-    # are distinct codes by construction.
     by_code: dict[str, list[str]] = {}
     for n in QUERIES:
         m = re.match(r"^([a-z]+[0-9]+[a-z]*)_", n)
         if m:
             by_code.setdefault(m.group(1), []).append(n)
-    for code, names in by_code.items():
-        if len(names) > 1:
-            problems.append(
-                f"numbering collision on '{code}': {sorted(names)} — rename "
-                "all but one before a driver row freezes the ambiguity"
-            )
-    expected = derive_active_window(repo_root)
-    if tuple(DRIVER_PRIORITY) != expected:
-        problems.append(
-            "DRIVER_PRIORITY is stale: it deviates from "
-            "derive_active_window() — the CORRECTNESS files changed after "
-            "import, or the constant was re-pinned by hand; re-import (the "
-            "window derives itself) instead of editing"
-        )
-    return problems
+    return [
+        f"numbering collision on '{code}': {sorted(names)} — rename "
+        "all but one before a driver row freezes the ambiguity"
+        for code, names in by_code.items()
+        if len(names) > 1
+    ]
+
+
+def _driver_order(d: dict, repo_root: str | None = None) -> dict:
+    """`d` stably sorted by _driver_staleness: never-green and red-newest
+    names first, then by the round of the newest green row, oldest first;
+    ties keep registration order."""
+    stale = _driver_staleness(repo_root)
+    return {n: d[n] for n in sorted(d, key=lambda n: stale.get(n, -1))}
 
 
 def load_registry():
@@ -539,8 +136,12 @@ def load_registry():
     failure (including ImportError) is recorded in REGISTRY_ERRORS and
     printed to stderr; nothing is tolerated silently.
 
-    Returns (QUERIES, ORACLE) reordered by _driver_order so the driver's
-    50-entry gate always lands on the queries that most need a row."""
+    Returns (QUERIES, ORACLE) ordered by driver staleness (_driver_order):
+    a query whose newest CORRECTNESS row is green sorts by that row's
+    round, oldest first; a query with no row, or whose newest row is red,
+    sorts before all of them; ties keep registration order. The driver's
+    50-entry gate therefore always lands on the least-recently-verified
+    queries, and the whole registry rotates through it."""
     import sys
     import traceback
 

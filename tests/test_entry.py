@@ -22,37 +22,20 @@ def test_oracle_keys_subset_of_queries():
 
 
 def test_all_queries_run_sf0001(spark, sf_dir):
+    """Every query runs; its columns are unique and, when it has an
+    oracle, each appears in the oracle SQL text (the driver sorts columns
+    by name before hashing). One plan build per query covers both."""
+    oracles = entrymod.oracle_sql()
     for name, fn in entrymod.queries().items():
         df = fn(spark, sf_dir)
         assert df.count() >= 0, name
         assert len(df.columns) == len(set(df.columns)), f"{name}: dup columns"
-
-
-def test_aliases_match_oracle_sql(spark, sf_dir):
-    """Spark result columns must all appear in the oracle SQL text (driver
-    sorts columns by name before hashing)."""
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    for name, sql in oracles.items():
-        cols = qs[name](spark, sf_dir).columns
-        sql_low = sql.lower()
-        for c in cols:
-            assert re.search(rf"\b{re.escape(c.lower())}\b", sql_low), (
-                f"{name}: column {c} not present in oracle SQL"
-            )
-
-
-def test_driver_window_is_fully_pinned():
-    """The driver checks the FIRST 50 registry entries. DRIVER_PRIORITY
-    pins all 50 explicitly; every name must resolve, with no dupes —
-    a new query registration must land beyond the window, never shift it."""
-    from etl_pipline_ibrd_loan_system_spark.queries import DRIVER_PRIORITY
-
-    qs = entrymod.queries()
-    assert len(DRIVER_PRIORITY) == 50
-    assert len(set(DRIVER_PRIORITY)) == 50
-    missing = [n for n in DRIVER_PRIORITY if n not in qs]
-    assert not missing, f"DRIVER_PRIORITY names not in registry: {missing}"
-    assert list(qs)[:50] == list(DRIVER_PRIORITY)
+        if name in oracles:
+            sql_low = oracles[name].lower()
+            for c in df.columns:
+                assert re.search(rf"\b{re.escape(c.lower())}\b", sql_low), (
+                    f"{name}: column {c} not present in oracle SQL"
+                )
 
 
 def test_rows_only_declarations_resolve():
@@ -64,77 +47,69 @@ def test_rows_only_declarations_resolve():
     assert set(qs) - set(oracles) <= ROWS_ONLY
 
 
-def test_rotation_plan_covers_and_window_is_current():
-    """Staleness lint (VERDICT r6 item 8): every registered query is
-    driver-checked or scheduled; every planned window is legal; the
-    active window is the earliest plan round still owed driver rows."""
-    from etl_pipline_ibrd_loan_system_spark.queries import rotation_lint
-
-    entrymod.queries()  # ensure registry populated
-    assert rotation_lint() == []
-
-
-def test_derive_active_window_counts_only_green_rows(tmp_path):
-    """VERDICT r8 item 2: the active window derives from the newest
-    CORRECTNESS files — no hand rotation. A red driver row must never
-    retire a query (VERDICT r7 item 2). Synthesize a repo root whose
-    CORRECTNESS file covers every registered query except one
-    ROTATION_PLAN[10] name: the derived window is round 10. A RED row
-    for a round-9 query pulls the window back to 9 (red != covered).
-    All-green: the window settles on the LAST plan round, padded to 50
-    for re-verification."""
+def test_driver_order_sorts_by_newest_green_round(tmp_path):
+    """The driver checks the first 50 registry entries, so the registry
+    order is the verification policy: a query's key is the round of its
+    NEWEST CORRECTNESS row if that row is green, else -1 (no row, or a red
+    newest row: a red row never retires a query); a stable sort keeps
+    registration order on ties."""
     import json
 
-    from etl_pipline_ibrd_loan_system_spark.queries import (
-        ROTATION_PLAN,
-        derive_active_window,
+    from etl_pipline_ibrd_loan_system_spark.queries import _driver_order
+
+    green = {"rows_match": True, "schema_match": True, "hash_match": True}
+    red = {"rows_match": True, "schema_match": True, "hash_match": False}
+    rows_only = {"rows_match": True, "schema_match": True, "hash_match": None}
+    (tmp_path / "CORRECTNESS_r03.json").write_text(json.dumps(
+        {"old_green": green, "turned_red": green, "tie_b": green,
+         "tie_a": green, "rows_only": green}
+    ))
+    (tmp_path / "CORRECTNESS_r11.json").write_text(json.dumps(
+        {"turned_red": red, "fresh": green, "rows_only": rows_only}
+    ))
+    # registration order is the dict's insertion order
+    registered = dict.fromkeys(
+        ["fresh", "rows_only", "tie_a", "never_a", "turned_red",
+         "old_green", "tie_b", "never_b"]
     )
-
-    qs = entrymod.queries()
-    green = {n: {"rows_match": True, "schema_match": True, "hash_match": True}
-             for n in qs}
-    hole = ROTATION_PLAN[10][0]
-    del green[hole]  # round 10 still owed one row
-    (tmp_path / "CORRECTNESS_r98.json").write_text(json.dumps(green))
-    w10 = ROTATION_PLAN[10]
-    derived = derive_active_window(str(tmp_path))
-    assert derived[: len(w10[:50])] == w10[:50]
-    assert len(derived) == 50 and len(set(derived)) == 50
-
-    # one round-9 query goes RED: round 9 is pending again
-    green[ROTATION_PLAN[9][0]] = {
-        "rows_match": True, "schema_match": True, "hash_match": False
-    }
-    (tmp_path / "CORRECTNESS_r98.json").write_text(json.dumps(green))
-    w9 = ROTATION_PLAN[9][:50]
-    assert derive_active_window(str(tmp_path))[: len(w9)] == w9
-
-    # everything green: last window, padded to the full 50-slot gate
-    green[ROTATION_PLAN[9][0]]["hash_match"] = True
-    green[hole] = {"rows_match": True, "schema_match": True,
-                   "hash_match": True}
-    (tmp_path / "CORRECTNESS_r98.json").write_text(json.dumps(green))
-    last = ROTATION_PLAN[max(ROTATION_PLAN)]
-    derived = derive_active_window(str(tmp_path))
-    assert len(derived) == 50
-    assert derived[: len(last)] == last
-    assert len(set(derived)) == 50
+    assert list(_driver_order(registered, str(tmp_path))) == [
+        "never_a",      # -1: no row
+        "turned_red",   # -1: newest row (r11) red, older r03 row green
+        "never_b",      # -1: ties keep registration order
+        "tie_a",        # r03 green; registered before old_green and tie_b
+        "old_green",
+        "tie_b",
+        "fresh",        # r11 green
+        "rows_only",    # r11 hash_match None counts as green
+    ]
 
 
-def test_rotation_lint_flags_numbering_collisions(monkeypatch):
-    """rotation_lint rule 4 (r11, generalizing the judge's dq17
-    finding): two registered names sharing a numbering code (`tx17_...`
-    twice) must fail the lint — ledger greps key on the code, so a
-    collision silently mis-credits driver rows. Letter-suffix variants
-    (dd3 vs dd3b) are distinct codes and stay legal."""
+def test_live_registry_is_in_driver_order():
+    """The live registry is a permutation of every registered query,
+    non-decreasing in the driver-staleness key."""
+    import etl_pipline_ibrd_loan_system_spark.queries as q
+
+    names = list(entrymod.queries())
+    assert sorted(names) == sorted(q.QUERIES)
+    stale = q._driver_staleness()
+    keys = [stale.get(n, -1) for n in names]
+    assert keys == sorted(keys)
+
+
+def test_registry_lint_flags_numbering_collisions(monkeypatch):
+    """registry_lint (generalizing the judge's dq17 finding): two
+    registered names sharing a numbering code (`tx17_...` twice) must
+    fail the lint — ledger greps key on the code, so a collision silently
+    mis-credits driver rows. Letter-suffix variants (dd3 vs dd3b) are
+    distinct codes and stay legal."""
     import etl_pipline_ibrd_loan_system_spark.queries as q
 
     entrymod.queries()  # populate
-    assert q.rotation_lint() == []  # live registry is collision-free
+    assert q.registry_lint() == []  # live registry is collision-free
     fake = dict(q.QUERIES)
     fake["tx1_shadow_duplicate"] = fake[next(iter(fake))]
     monkeypatch.setattr(q, "QUERIES", fake)
-    probs = q.rotation_lint()
+    probs = q.registry_lint()
     assert any("numbering collision on 'tx1'" in p for p in probs)
     # letter-suffix variants are NOT collisions
     assert not any("'dd3'" in p for p in probs)

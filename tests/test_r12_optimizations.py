@@ -8,6 +8,7 @@ shingle-hash verification vs string-set verification).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -241,6 +242,41 @@ def test_pair_payload_once_matches_two_join_form(spark):
     )
     assert got == want
     assert len(got) == 3  # (2,7) dropped
+
+
+def test_pair_payload_once_raises_on_duplicated_pair(spark):
+    """A pair listed twice meets four payload rows: the two-join form
+    would emit it twice, the old `__n == 2` filter dropped it silently.
+    It must fail the query instead."""
+    from etl_pipline_ibrd_loan_system_spark.operators.dedup import (
+        _pair_payload_once,
+    )
+
+    payload = spark.createDataFrame(
+        [(1, [10]), (2, [20]), (3, [30])], "doc_id long, shingles array<bigint>"
+    )
+    pairs = spark.createDataFrame(
+        [(1, 2), (1, 2), (2, 3)], "id_a long, id_b long"
+    )
+    with pytest.raises(Exception, match="_pair_payload_once"):
+        _pair_payload_once(pairs, payload, "doc_id", ["shingles"]).collect()
+
+
+def test_pair_payload_once_raises_on_duplicated_payload_id(spark):
+    """An id with two payload rows whose partner has none met two rows on
+    one side: the old filter fabricated a pair with a == b. It must fail
+    the query instead."""
+    from etl_pipline_ibrd_loan_system_spark.operators.dedup import (
+        _pair_payload_once,
+    )
+
+    payload = spark.createDataFrame(
+        [(1, [10]), (1, [11]), (2, [20]), (3, [30])],
+        "doc_id long, shingles array<bigint>",
+    )
+    pairs = spark.createDataFrame([(1, 7), (2, 3)], "id_a long, id_b long")
+    with pytest.raises(Exception, match="_pair_payload_once"):
+        _pair_payload_once(pairs, payload, "doc_id", ["shingles"]).collect()
 
 
 def test_salted_allpairs_calibration_matches_plain_join(spark, sf_dir):

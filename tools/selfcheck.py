@@ -135,14 +135,13 @@ def main() -> int:
     from etl_pipline_ibrd_loan_system_spark.queries import (
         REGISTRY_ERRORS,
         ROWS_ONLY,
-        rotation_lint,
+        registry_lint,
     )
     failed = []
-    # driver-window staleness lint (VERDICT r6 item 8): the registry can't
-    # outgrow its driver-verification schedule — fail fast, before anything runs
-    for problem in rotation_lint():
-        print(f"FAIL  rotation: {problem}")
-        failed.append("lint:rotation")
+    # numbering-collision lint: fail fast, before anything runs
+    for problem in registry_lint():
+        print(f"FAIL  registry: {problem}")
+        failed.append("lint:registry")
     # registry lint (VERDICT r4 item 7): every query needs an oracle or an
     # explicit rows-only declaration — fail fast, before anything runs
     for name in qs:
@@ -155,14 +154,6 @@ def main() -> int:
     for name in sorted(ROWS_ONLY - set(qs)):
         print(f"FAIL  ROWS_ONLY declares unknown query {name!r}")
         failed.append(f"lint:{name}")
-    # a typoed DRIVER_PRIORITY name is silently skipped by _driver_order,
-    # shrinking the driver's 50-slot window with no error anywhere
-    from etl_pipline_ibrd_loan_system_spark.queries import DRIVER_PRIORITY
-
-    for name in DRIVER_PRIORITY:
-        if name not in qs:
-            print(f"FAIL  DRIVER_PRIORITY names unknown query {name!r}")
-            failed.append(f"lint:{name}")
     if only:
         for name in sorted(only - set(qs)):
             # a typoed name must not count as passed (it would never run)
