@@ -4,7 +4,9 @@ Runs the representative query set at $SPARK_GRAFT_SF_DIR (default sf0.1)
 on local[$SPARK_GRAFT_CPUS]. Each query executes to completion via the
 `noop` sink (full computation, no driver-side result transfer) four
 times: a cold pass (JIT + first-touch I/O, reported as `cold_value`)
-and three steady-state passes on freshly built plans. Per-query min is
+and three steady-state passes on freshly built plans. Each pass goes
+through the measurement core (`measure.run_pass`), which also reports
+the pass's jobs, stages, shuffle and spill. Per-query min is
 the headline (damps shuffle jitter; summed as `value`); the median is
 reported alongside (`queries_median` / `median_value`) so cross-round
 noise is self-evident, and `loadavg_start` / `loadavg_end` record machine
@@ -37,7 +39,9 @@ out to be ambient load would have been damped to noise. Output:
     {"metric": "...", "value": <steady total sec>, "unit": "sec",
      "queries": {...per-query min sec...},
      "median_value": <steady median total>, "queries_median": {...},
-     "cold_value": <cold total sec>,
+     "cold_value": <cold total sec>, "queries_cold": {...},
+     "queries_profile": {name: {"jobs", "stages", "skipped_stages",
+                                "shuffle_write_mb", "spill_mb"}},
      "loadavg": [1m, 5m, 15m at start],
      "loadavg_end": [1m, 5m, 15m after the loop],
      "load_gate": {"threshold": 2.5, "waited_sec": N, "exceeded": bool},
@@ -164,20 +168,17 @@ def main() -> None:
     # session.silence_bounded_window_warn for the audit rationale
     silence_bounded_window_warn(spark)
     import __spark_entry__ as entrymod
+    from etl_pipline_ibrd_loan_system_spark.measure import (
+        STAGE_METRICS,
+        run_pass,
+    )
 
     qs = entrymod.queries()
     all_passes: dict[str, list[float]] = {}
     cold: dict[str, float] = {}
     load_start = os.getloadavg()
-    # $SPARK_GRAFT_EXTRA_QUERIES (comma-separated) appends one-off
-    # entries — used for the r9 raw-vs-twin overlap run so the headline
-    # swap keeps trend continuity without reverting the set.
-    extra = [
-        n
-        for n in os.environ.get("SPARK_GRAFT_EXTRA_QUERIES", "").split(",")
-        if n and n not in HEADLINE
-    ]
-    live = [n for n in HEADLINE + extra if n in qs]
+    live = [n for n in HEADLINE if n in qs]
+    profile: dict[str, dict] = {}
     # Sweep 0 starts with the cold pass per query (whole-stage-codegen
     # JIT + first-touch parquet decode — one-time JVM costs, 3-5x steady
     # state at sf0.1, reported separately), then 2 steady passes on
@@ -185,22 +186,20 @@ def main() -> None:
     # only within its own lineage). Sweep 1 re-measures every query 2
     # more times AFTER the whole set has gone around once: the per-query
     # min across both sweeps is immune to a load spike unless it spans
-    # the entire run.
+    # the entire run. A pass's time is its plan build plus its noop
+    # write (measure.run_pass); cache drops and metric reads fall outside.
     for sweep in range(2):
         for name in live:
             fn = qs[name]
             if sweep == 0:
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                cold[name] = round(time.perf_counter() - t0, 3)
-                spark.catalog.clearCache()  # drop warm-up persists
+                rec = run_pass(spark, fn, sf_dir)
+                cold[name] = round(rec["build_s"] + rec["exec_s"], 3)
             for _ in range(2):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                rec = run_pass(spark, fn, sf_dir)
                 all_passes.setdefault(name, []).append(
-                    time.perf_counter() - t0
+                    rec["build_s"] + rec["exec_s"]
                 )
-                spark.catalog.clearCache()
+            profile[name] = {k: rec[k] for k in STAGE_METRICS}
     timings = {}
     medians = {}
     for name, passes in all_passes.items():
@@ -238,6 +237,10 @@ def main() -> None:
                 # whole-stage-codegen compile + first-touch I/O, paid
                 # once per JVM per generated class)
                 "queries_cold": cold,
+                # the last steady pass's Spark work per query: jobs,
+                # executed and skipped stages, shuffle write and spill
+                # (MB = 1e6 bytes), read from the JVM status store
+                "queries_profile": profile,
                 # parallelism proof (r12): what the session actually ran
                 "master": resolved_master,
                 "default_parallelism": default_parallelism,

@@ -28,10 +28,6 @@ TABLES = (
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
-def sf_dir_from_env(default: str = "/root/testdata/sf0.1") -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", default)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan — columnar, Catalyst pushes filters/pruning into it.
 

@@ -137,14 +137,3 @@ def audit_dates(
     return df.withColumn(start_col, stamp).withColumn(
         end_col, F.lit(None).cast("timestamp" if as_timestamp else "date")
     )
-
-
-def cast_columns(df: DataFrame, casts: Mapping[str, str]) -> DataFrame:
-    """B11/B12 — type-cast projection (SSIS `(DT_WSTR,50)` casts,
-    `project SSIS::loan_fact.dtsx:221-443`)."""
-    return df.select(
-        *[
-            F.col(c).cast(casts[c]).alias(c) if c in casts else F.col(c)
-            for c in df.columns
-        ]
-    )

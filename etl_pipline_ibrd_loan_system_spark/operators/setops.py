@@ -30,11 +30,6 @@ def union_pages(
     return acc
 
 
-def union_all(pages: Iterable[DataFrame]) -> DataFrame:
-    """F2 — dataflow-style Union All (SSIS `bor_dim.dtsx:1448+`)."""
-    return reduce(DataFrame.unionByName, pages)
-
-
 def union_evolving(pages: Iterable[DataFrame]) -> DataFrame:
     """Schema-drift tolerant UNION ALL: later pages may add or drop
     columns (API envelope evolution — the failure mode a long-lived paged

@@ -184,20 +184,6 @@ def hll_collapse_sql(regs_cte: str, b: int = DEFAULT_B) -> str:
     )
 
 
-def hll_registers_sql(source_sql: str, b: int = DEFAULT_B, cap: int = RHO_CAP) -> str:
-    """DuckDB replay of hll_registers over `source_sql` (a query with a
-    single column `v`): yields bucket, m_reg rows."""
-    m = 2 ** b
-    h = "CAST('0x' || substr(md5(CAST(v AS VARCHAR)), 1, 15) AS BIGINT)"
-    rho = _rho_sql(f"h // {m}", cap)
-    return (
-        f"SELECT bucket, MAX(rho) AS m_reg FROM ("
-        f"SELECT h % {m} AS bucket, {rho} AS rho FROM "
-        f"(SELECT {h} AS h FROM ({source_sql}))"
-        f") GROUP BY bucket"
-    )
-
-
 def histogram_quantiles(
     df: DataFrame,
     col: str,

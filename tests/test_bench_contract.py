@@ -52,6 +52,10 @@ def test_bench_emits_contract_json_line():
     # $SPARK_GRAFT_CPUS was honored without trusting the env
     assert d["master"].startswith("local["), d["master"]
     assert d["default_parallelism"] >= 1
+    # per-query Spark work from the measurement core (last steady pass)
+    assert set(d["queries_profile"]) == set(d["queries"])
+    for name, prof in d["queries_profile"].items():
+        assert prof["jobs"] >= 1 and prof["stages"] >= 1, (name, prof)
 
 
 def test_headline_near_dup_entries_are_the_collapse_twins():

@@ -2,7 +2,9 @@
 (pushdown? pruned read? join strategies? shuffle count?) for the bench
 headline queries — the reproducible evidence behind SCALE.md.
 
-Usage: python tools/explain_audit.py [query ...]   (default: bench set)
+Usage: python tools/explain_audit.py [sf_dir] [query ...]
+       (defaults: sf0.01 beside the catalog's default testdata dir, and
+       the bench.py HEADLINE set)
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from bench import HEADLINE  # noqa: E402
+from etl_pipline_ibrd_loan_system_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 from etl_pipline_ibrd_loan_system_spark.session import get_session  # noqa: E402
 
 
@@ -32,8 +35,9 @@ def _codegen_subtrees(df) -> int:
 
 
 def main() -> None:
-    names = sys.argv[1:] or HEADLINE
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    args = sys.argv[1:]
+    sf_dir = args[0] if args else os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.01")
+    names = args[1:] or HEADLINE
     spark = get_session("explain-audit")
     qs = entrymod.queries()
     for name in names:
