@@ -4,6 +4,10 @@ SCD2 star (two loads) -> fact lookup cascade -> measure query."""
 
 from __future__ import annotations
 
+import os
+import threading
+import uuid
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -152,6 +156,7 @@ def test_star_snaptable_merge_path(spark, staging, tmp_path):
     manifests = lp.apply_star_increment_snaptable(
         spark, staging2, asof="2024-06-01", root=root
     )
+    assert list(manifests) == [f"dim_{n}" for n in lp.DIM_SPECS]
     assert all(m["version"] == 2 for m in manifests.values())
 
     # reference path: in-memory overwrite-rebuild (the g1-oracle shape)
@@ -199,6 +204,55 @@ def test_star_snaptable_merge_path(spark, staging, tmp_path):
     # country_code is T1 on dim_country: overwritten in place, same row count
     assert len(cur) == 1 and cur[0].country_code == "fx"
     assert ctry3.count() == 2
+
+
+def _group_jobs(spark, group):
+    """Job ids the status store holds for `group` (None = no group),
+    read after the listener bus has delivered every event."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_star_snaptable_jobs_stay_in_caller_job_group(spark, staging, tmp_path):
+    """The 7 dimension commits run on worker threads; each must inherit
+    the caller's job group, or per-group tracing (perfbench spans,
+    measure.run_pass) silently drops their jobs. Every job the two calls
+    run lands in the caller's group, and none lands outside any group."""
+    sc = spark.sparkContext
+    root = str(tmp_path / "warehouse")
+    init_group, merge_group = (f"star-{s}-{uuid.uuid4().hex}" for s in ("init", "merge"))
+    ungrouped = _group_jobs(spark, None)
+    try:
+        sc.setJobGroup(init_group, "init_star_snaptable")
+        lp.init_star_snaptable(spark, staging, asof="2024-01-01", root=root)
+        sc.setJobGroup(merge_group, "apply_star_increment_snaptable")
+        lp.apply_star_increment_snaptable(spark, staging, asof="2024-06-01", root=root)
+    finally:
+        sc._jsc.clearJobGroup()
+    for group in (init_group, merge_group):
+        assert len(_group_jobs(spark, group)) >= len(lp.DIM_SPECS), group
+    assert _group_jobs(spark, None) - ungrouped == set()
+
+
+def test_star_snaptable_failure_waits_for_every_dimension(spark, staging, tmp_path):
+    """One failing dimension (dim_region already exists) raises only
+    after every other dimension's commit finished and published, and no
+    worker thread outlives the call."""
+    from etl_pipline_ibrd_loan_system_spark.sources import snaptable
+
+    root = str(tmp_path / "warehouse")
+    snaptable.create(
+        spark, os.path.join(root, "dim_region"),
+        spark.createDataFrame([(1,)], "region_bk int"), "region_bk",
+    )
+    threads = threading.active_count()
+    with pytest.raises(FileExistsError, match="dim_region"):
+        lp.init_star_snaptable(spark, staging, asof="2024-01-01", root=root)
+    assert threading.active_count() == threads
+    for name in lp.DIM_SPECS:
+        if name != "region":
+            assert snaptable.current_version(os.path.join(root, f"dim_{name}")) == 1, name
 
 
 def test_fact_sink_numeric18_narrowing(spark):
