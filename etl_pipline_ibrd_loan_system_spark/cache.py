@@ -10,12 +10,6 @@ query call, so in the driver's sequential query loop at most one
 query's pins are cached at a time (the previous query's result has been
 materialized by then; unpersisting a never-materialized pin is a no-op).
 
-Pins may be added from worker threads within one call: the loan star's
-7 concurrent dimension commits (`plans/loan_pipeline.py::_commit_dims`)
-each pin their SCD2 classify. `release_pinned` therefore stays at the
-query boundary and is never called inside per-thread work, where it
-would unpersist pins other threads are still reading.
-
 Storage level is MEMORY_AND_DISK for every pin: bounded memory (spills,
 never recomputes), which is also the 100 TB-correct level — see the
 minhash_dedup_pairs rationale.

@@ -25,11 +25,14 @@ of disjoint slices — the classic MERGE-free SCD2:
   ∪ matched-T2 closed                      (end_date := asof, is_current := F)
   ∪ matched-T2 new versions ∪ brand-new    (fresh SKs, start_date := asof)
 
-Every slice derives from ONE broadcast-probe left join (staging ⟕ current),
-classified once; the rebuild is shuffle-free apart from that join (current
-dims are small) and the optional dense surrogate-key sort, which runs on the
-*new rows only*. At 100 TB the `hash` SK strategy removes the only global
-sort.
+The four matched/new slices derive from ONE broadcast-probe left join
+(staging ⟕ current), classified once; each classified row then passes
+once through one routing generator (`_route`), which emits its old-side
+row and/or its fresh version — no per-slice re-filter, no cache. The
+rebuild is shuffle-free apart from that join (current dims are small) and
+the optional dense surrogate-key window, which covers only the routed
+(staging-grain) rows, never history. At 100 TB the `hash` SK strategy
+removes the only global sort.
 
 Invariants (property-tested in tests/test_scd.py): at most one current row
 per business key; version intervals [start_date, end_date) never overlap;
@@ -144,8 +147,8 @@ def scd2_init(
     unpartitioned window (single-task sort at dimension grain) — pin it
     only where an oracle or a downstream IDENTITY contract encodes the
     dense numbering (VERDICT r7 "What's wrong" #4)."""
-    distinct = dedupe_staging(staging, key, attr_cols)
-    keyed = _assign_sks(distinct, key, sk_col, offset=0, strategy=sk_strategy, asof=asof)
+    distinct = dedupe_staging(staging, key, attr_cols).withColumn(sk_col, F.lit(None))
+    keyed = _assign_sks(distinct, key, sk_col, F.lit(True), sk_strategy, asof)
     return keyed.select(
         sk_col,
         key,
@@ -157,25 +160,50 @@ def scd2_init(
 
 
 def _assign_sks(
-    rows: DataFrame, key: str, sk_col: str, offset, strategy: str, asof: str
+    rows: DataFrame, key: str, sk_col: str, fresh: Column, strategy: str,
+    asof: str, max_sk: DataFrame | None = None,
 ) -> DataFrame:
-    if strategy == "dense":
-        # Deliberately unpartitioned: dense mode IS a single-task global
-        # sort (IDENTITY parity). A lit(0) partition key does not silence
-        # WindowExec's WARN — Catalyst constant-folds foldable partition
-        # expressions back to an empty spec — so sweep tooling suppresses
-        # the logger instead (bench.py / tools/selfcheck.py).
-        w = Window.orderBy(key)
-        out = rows.withColumn(sk_col, F.row_number().over(w))
-        if isinstance(offset, int):
-            return out.withColumn(sk_col, F.col(sk_col) + F.lit(offset))
-        # offset is a 1-row DataFrame [__max_sk] — broadcast, no collect
-        return out.crossJoin(F.broadcast(offset)).withColumn(
-            sk_col, F.col(sk_col) + F.coalesce(F.col("__max_sk"), F.lit(0))
-        ).drop("__max_sk")
+    """Number the rows `fresh` selects; every other row keeps its sk_col.
+
+    hash: xxhash64(key, asof), no coordination with the dimension.
+    dense (IDENTITY parity): the fresh rows numbered 1..n in key order,
+    plus `max_sk` — a 1-row [__max_sk] DataFrame, broadcast, never
+    collected — when continuing an existing dimension."""
     if strategy == "hash":
-        return rows.withColumn(sk_col, F.xxhash64(F.col(key), F.lit(asof)))
-    raise ValueError(f"unknown sk_strategy {strategy!r}")
+        sk = F.xxhash64(F.col(key), F.lit(asof))
+    elif strategy == "dense":
+        # Dense mode IS a single-task sort per fresh flag (IDENTITY
+        # parity). A foldable flag (scd2_init's lit(True)) folds back to
+        # an unpartitioned window, whose WindowExec WARN sweep tooling
+        # suppresses at the logger (bench.py / tools/selfcheck.py).
+        sk = F.row_number().over(Window.partitionBy(fresh).orderBy(key))
+        if max_sk is not None:
+            rows = rows.crossJoin(F.broadcast(max_sk))
+            sk = sk + F.coalesce(F.col("__max_sk"), F.lit(0))
+    else:
+        raise ValueError(f"unknown sk_strategy {strategy!r}")
+    return rows.withColumn(
+        sk_col, F.when(fresh, sk).otherwise(F.col(sk_col))
+    ).drop("__max_sk")
+
+
+def _route(
+    rows: DataFrame, cols: Sequence[str],
+    outputs: Sequence[tuple[Column, dict[str, Column]]],
+) -> DataFrame:
+    """Send each row to every output whose condition it meets, in one pass.
+
+    Each output is (condition, overrides): one `when(condition,
+    struct(cols))` slot, each field taken from `overrides` or else from
+    the row's own column. The non-NULL slots of a row come out as rows
+    (`inline` over the filtered slot array) — the SSIS SCD transform's
+    per-row routing to its outputs, without re-reading `rows` per
+    output."""
+    slots = [
+        F.when(cond, F.struct(*[over.get(c, F.col(c)).alias(c) for c in cols]))
+        for cond, over in outputs
+    ]
+    return rows.select(F.inline(F.filter(F.array(*slots), lambda s: s.isNotNull())))
 
 
 def scd2_apply(
@@ -206,22 +234,12 @@ def scd2_apply(
     # each classify and each insert a current version (invariant breach)
     staging = dedupe_staging(staging, key, attrs)
 
-    # The downstream branches (unchanged/T1/T2-close/fresh) filter this
-    # same join result — pin it or the staging⟕dim probe join runs once
-    # per branch (spill-capable, never recompute; released at the next
-    # registry query, cache.py). Probe and the untouched anti-join both
-    # broadcast, so a fact-free apply plans ZERO shuffles
-    # (tests/test_plan_regressions.py g8/g8b/dq10 guard exactly this).
-    from ..cache import pin
-
-    classified = pin(scd_classify(
+    # Probe and the untouched anti-join both broadcast, so a fact-free
+    # apply plans ZERO shuffles (tests/test_plan_regressions.py
+    # g8/g8b/dq10 guard exactly this).
+    classified = scd_classify(
         dim, staging, key, t1_cols, t2_cols, fixed_cols, sk_col, current_col,
-    ))
-
-    def project(df: DataFrame, overrides: dict[str, Column]) -> DataFrame:
-        return df.select(
-            *[overrides.get(c, F.col(c)).alias(c) for c in dim_cols]
-        )
+    )
 
     history = dim.filter(~F.col(current_col))
     # untouched = current dim keys staging never mentions (SSIS only
@@ -230,43 +248,31 @@ def scd2_apply(
         staging.select(key).distinct(), key, "left_anti"
     ).select(*dim_cols)
 
-    unchanged = project(classified.filter(F.col("change_type") == CHANGE_NONE), {})
-    t1_updated = project(
-        classified.filter(F.col("change_type") == CHANGE_T1),
-        {c: F.col(f"s_{c}") for c in t1_cols},
-    )
-    t2_closed = project(
-        classified.filter(F.col("change_type") == CHANGE_T2),
-        {
-            end_col: F.lit(asof).cast(date_type),
-            current_col: F.lit(False),
-        },
-    )
-
-    fresh_src = classified.filter(
-        F.col("change_type").isin(CHANGE_NEW, CHANGE_T2)
-    ).select(F.col(key), *[F.col(f"s_{c}").alias(c) for c in attrs])
+    change = F.col("change_type")
+    asof_d = F.lit(asof).cast(date_type)
+    routed = _route(classified, dim_cols, [
+        (change == CHANGE_NONE, {}),
+        (change == CHANGE_T1, {c: F.col(f"s_{c}") for c in t1_cols}),
+        (change == CHANGE_T2, {end_col: asof_d, current_col: F.lit(False)}),
+        # the fresh version; its NULL sk marks it for numbering (every
+        # matched row carries the dim row's non-NULL sk)
+        (change.isin(CHANGE_NEW, CHANGE_T2), {
+            sk_col: F.lit(None).cast(dim.schema[sk_col].dataType),
+            **{c: F.col(f"s_{c}") for c in attrs},
+            start_col: asof_d,
+            end_col: F.lit(None).cast(date_type),
+            current_col: F.lit(True),
+        }),
+    ])
     # the global-max offset only exists for dense (IDENTITY-continuation)
     # numbering; hash sks need no coordination with the existing dimension
     max_sk = (
-        dim.agg(F.max(sk_col).alias("__max_sk")) if sk_strategy == "dense" else 0
+        dim.agg(F.max(sk_col).alias("__max_sk")) if sk_strategy == "dense" else None
     )
-    fresh = _assign_sks(
-        fresh_src, key, sk_col, offset=max_sk, strategy=sk_strategy, asof=asof
+    routed = _assign_sks(
+        routed, key, sk_col, F.col(sk_col).isNull(), sk_strategy, asof, max_sk
     )
-    fresh = fresh.select(
-        *[
-            {
-                start_col: F.lit(asof).cast(date_type).alias(start_col),
-                end_col: F.lit(None).cast(date_type).alias(end_col),
-                current_col: F.lit(True).alias(current_col),
-            }.get(c, F.col(c).alias(c))
-            for c in dim_cols
-        ]
-    )
-
-    parts = [history, untouched, unchanged, t1_updated, t2_closed, fresh]
-    return reduce(DataFrame.unionByName, parts)
+    return history.unionByName(untouched).unionByName(routed)
 
 
 def _null_safe_differs_sql(left: str, right: str, cols: Sequence[str]) -> str:
@@ -310,7 +316,7 @@ def scd2_merge_sql(
     no global row_number. Semantics mirror scd2_apply slice-for-slice;
     the overwrite-rebuild remains the sandbox-executable twin (no Delta
     here), so this generator is validated by parser + text tests and by
-    shape parity with the rebuild's branches.
+    shape parity with the rebuild's routing slots.
     """
     attrs = [*t1_cols, *t2_cols, *fixed_cols]
     t2_pred_sd = _null_safe_differs_sql("s", "d", t2_cols)
@@ -636,8 +642,8 @@ def bitemporal_apply(
     exactly one row per key per (X, V) (invariant-tested).
 
     Scale: identical physical shape to scd2_apply — ONE broadcast probe
-    join of staging against the open slice, then pure disjoint
-    projections and a union; never a window, never a row UPDATE.
+    join of staging against the open slice, then one routing pass
+    (`_route`) and a union; never a window, never a row UPDATE.
     Reference anchor: the per-row UPDATEs of `project
     SSIS::bor_dim.dtsx:454,566` are the T1 path here, with the audit
     trail those UPDATEs destroy."""
@@ -647,53 +653,38 @@ def bitemporal_apply(
     is_open = F.col("tx_to").isNull() & F.col("valid_to").isNull()
     dim2 = dim.withColumn("__open", is_open)
     # valid_from doubles as the new-key detector (never NULL in a dim row)
-    from ..cache import pin
-
-    cls = pin(scd_classify(
+    cls = scd_classify(
         dim2, staging, key, t1_cols, t2_cols, fixed_cols,
         sk_col="valid_from", current_col="__open",
-    ))
+    )
 
     asof_d = F.lit(asof).cast(date_type)
     null_d = F.lit(None).cast(date_type)
-
-    def project(df: DataFrame, overrides: dict[str, Column]) -> DataFrame:
-        return df.select(
-            *[overrides.get(c, F.col(c)).alias(c) for c in dim_cols]
-        )
+    change = F.col("change_type")
 
     untouched = dim.filter(~is_open).select(*dim_cols).unionByName(
         dim.filter(is_open)
         .join(staging.select(key).distinct(), key, "left_anti")
         .select(*dim_cols)
     )
-    unchanged = project(cls.filter(F.col("change_type") == CHANGE_NONE), {})
-    tx_closed = project(
-        cls.filter(F.col("change_type").isin(CHANGE_T1, CHANGE_T2)),
-        {"tx_to": asof_d},
-    )
-    t1_corrected = project(
-        cls.filter(F.col("change_type") == CHANGE_T1),
-        {**{c: F.col(f"s_{c}") for c in t1_cols}, "tx_from": asof_d},
-    )
-    t2_old_version = project(
-        cls.filter(F.col("change_type") == CHANGE_T2),
-        {"valid_to": asof_d, "tx_from": asof_d},
-    )
-    fresh = cls.filter(
-        F.col("change_type").isin(CHANGE_NEW, CHANGE_T2)
-    ).select(
-        F.col(key),
-        *[F.col(f"s_{c}").alias(c) for c in attrs],
-        asof_d.alias("valid_from"),
-        null_d.alias("valid_to"),
-        asof_d.alias("tx_from"),
-        null_d.alias("tx_to"),
-    ).select(*dim_cols)
-
-    parts = [untouched, unchanged, tx_closed, t1_corrected,
-             t2_old_version, fresh]
-    return reduce(DataFrame.unionByName, parts)
+    routed = _route(cls, dim_cols, [
+        (change == CHANGE_NONE, {}),
+        # tx-close the open row on any change
+        (change.isin(CHANGE_T1, CHANGE_T2), {"tx_to": asof_d}),
+        # T1 correction: same valid interval, corrected T1 columns
+        (change == CHANGE_T1,
+         {**{c: F.col(f"s_{c}") for c in t1_cols}, "tx_from": asof_d}),
+        # T2: the old version re-known with its valid interval closed
+        (change == CHANGE_T2, {"valid_to": asof_d, "tx_from": asof_d}),
+        (change.isin(CHANGE_NEW, CHANGE_T2), {
+            **{c: F.col(f"s_{c}") for c in attrs},
+            "valid_from": asof_d,
+            "valid_to": null_d,
+            "tx_from": asof_d,
+            "tx_to": null_d,
+        }),
+    ])
+    return untouched.unionByName(routed)
 
 
 def bitemporal_at(

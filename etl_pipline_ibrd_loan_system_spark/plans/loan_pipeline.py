@@ -202,7 +202,7 @@ def apply_star_increment(
         fixed = [a for a in attrs if a not in t1 and a not in t2]
         out[f"dim_{name}"] = scd2_apply(
             dims[f"dim_{name}"],
-            staging.where(F.col(bk).isNotNull()).select(bk, *attrs).distinct(),
+            staging.where(F.col(bk).isNotNull()).select(bk, *attrs),
             key=bk, t1_cols=t1, t2_cols=t2, fixed_cols=fixed,
             asof=asof, sk_col=f"pk_{name}_sk", sk_strategy="dense",
             date_type=_dim_date_type(name),
@@ -299,7 +299,7 @@ def apply_star_increment_snaptable(
         fixed = [a for a in attrs if a not in t1 and a not in t2]
         return snaptable.scd2_merge(
             spark, os.path.join(root, f"dim_{name}"),
-            staging.where(F.col(bk).isNotNull()).select(bk, *attrs).distinct(),
+            staging.where(F.col(bk).isNotNull()).select(bk, *attrs),
             t1_cols=t1, t2_cols=t2, fixed_cols=fixed, asof=asof,
             date_type=_dim_date_type(name),
         )

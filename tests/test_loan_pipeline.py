@@ -235,6 +235,22 @@ def test_star_snaptable_jobs_stay_in_caller_job_group(spark, staging, tmp_path):
     assert _group_jobs(spark, None) - ungrouped == set()
 
 
+def test_star_snaptable_apply_leaves_no_pins(spark, staging, tmp_path):
+    """The increment's SCD2 merges route each classified row once, so
+    nothing needs a cache: the apply adds no registered pin and no
+    persisted RDD, which a long-lived session would otherwise
+    accumulate every hour."""
+    from etl_pipline_ibrd_loan_system_spark import cache
+
+    sc = spark.sparkContext
+    root = str(tmp_path / "warehouse")
+    lp.init_star_snaptable(spark, staging, asof="2024-01-01", root=root)
+    pins, rdds = len(cache._PINNED), set(sc._jsc.getPersistentRDDs())
+    lp.apply_star_increment_snaptable(spark, staging, asof="2024-06-01", root=root)
+    assert len(cache._PINNED) == pins
+    assert set(sc._jsc.getPersistentRDDs()) == rdds
+
+
 def test_star_snaptable_failure_waits_for_every_dimension(spark, staging, tmp_path):
     """One failing dimension (dim_region already exists) raises only
     after every other dimension's commit finished and published, and no

@@ -975,6 +975,37 @@ def test_pipeline_snaptable_dim_build_is_window_free(spark, tmp_path):
     assert "SinglePartition" not in plan
 
 
+def test_scd2_apply_routes_classified_rows_in_one_pass(spark):
+    """scd2_apply probes staging ⟕ current once and routes every
+    classified row through one generator: no cache (InMemoryRelation /
+    InMemoryTableScan), exactly one Generate, and the broadcast
+    LeftOuter probe join appears once — a per-change-type re-filter of
+    the probe would show it (or its cache scan) once per branch."""
+    import re
+
+    from etl_pipline_ibrd_loan_system_spark.operators.scd import scd2_apply
+
+    dim = spark.createDataFrame(
+        [
+            (1, "k1", "a", "x", "2020-01-01", None, True),
+            (9, "k1", "old", "x", "2019-01-01", "2020-01-01", False),
+            (2, "k2", "b", "y", "2020-01-01", None, True),
+        ],
+        "sk long, k string, t2a string, t1a string, start_date string,"
+        " end_date string, is_current boolean",
+    )
+    staging = spark.createDataFrame(
+        [("k1", "A", "x"), ("k3", "c", "z")], "k string, t2a string, t1a string"
+    )
+    plan = _plan(scd2_apply(
+        dim, staging, key="k", t1_cols=["t1a"], t2_cols=["t2a"],
+        asof="2024-01-01", sk_strategy="hash", date_type="string",
+    ))
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
+    assert len(re.findall(r"^\(\d+\) Generate", plan, re.M)) == 1
+    assert len(re.findall(r"BroadcastHashJoin LeftOuter", plan)) == 1
+
+
 def test_b18_narrowing_is_shuffle_free_projection(spark, sf_dir, registry):
     """b18 is the fact-sink cast: Scan -> Project, no Exchange, no
     Window — the narrowing must never add a stage to the fact build."""

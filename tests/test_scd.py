@@ -80,6 +80,20 @@ def test_apply_routing(spark, dims):
     assert rows[("b4", True)].name == "delta"
     # new key inserted with fresh SK
     assert rows[("b5", True)].sk > 4
+    # dense continuation: fresh rows numbered from max(sk) + 1 in key order
+    assert b3_new.sk == 5 and rows[("b5", True)].sk == 6
+
+    # T1 and T2 both change: T2 wins, so the closed row keeps its OLD T1
+    # value; the successor carries both new values
+    s2 = spark.createDataFrame([("b2", "beta_renamed", 26.0, "de")], COLS)
+    dim2 = scd2_apply(dim1, s2, asof="2024-03-01", sk_strategy="dense", **KW)
+    b2s = {r.is_current: r for r in dim2.filter("bk = 'b2'").collect()}
+    assert len(b2s) == 2
+    closed, succ = b2s[False], b2s[True]
+    assert (closed.sk, closed.name, closed.balance) == (2, "beta", 25.0)
+    assert str(closed.end_date) == "2024-03-01"
+    assert (succ.sk, succ.name, succ.balance) == (7, "beta_renamed", 26.0)
+    assert str(succ.start_date) == "2024-03-01" and succ.end_date is None
 
 
 def test_invariant_one_current_per_key(spark, dims):
