@@ -1355,12 +1355,13 @@ def sorted_neighborhood_pairs(
     the first key_len chars (that's the method's documented recall
     boundary, complementary to dd3/dd4).
 
-    Scale shape: the global sort rank is computed with the e1b two-pass
-    trick — range-partition on the key, rank locally per bucket, then
-    add broadcast per-bucket prefix offsets — so there is NO global
-    window (a row_number over the corpus would funnel 100 TB through
-    one task; the rank here is boundary-invariant because offset +
-    local rank is the same under ANY range split of a total order).
+    Scale shape: the global sort rank is computed inline with the
+    two-pass range-bucket scheme of `window_ops.global_rank_scalable` —
+    range-partition on the key, rank locally per bucket, then add
+    broadcast per-bucket prefix offsets — so there is NO global window
+    (a row_number over the corpus would funnel 100 TB through one task;
+    the rank here is boundary-invariant because offset + local rank is
+    the same under ANY range split of a total order).
     Candidate generation is an explode of `window` successor ranks and
     ONE integer equi-join on rank — hash-uniform keys, no skew, output
     exactly window * n rows before the similarity gate.

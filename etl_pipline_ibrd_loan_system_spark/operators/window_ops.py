@@ -3,16 +3,19 @@
 The reference's one window op is a global-order forward-fill
 (pyspark_dag2.py:371-379): `last(col, ignorenulls=True)` over
 `Window.orderBy(key).rowsBetween(-inf, 0)` with NO partitionBy — a
-single-task global sort. We keep that exact semantic for parity and add the
-scalable two-pass variant a 100 TB run needs.
+single-task global sort. We keep that exact semantic for parity, and
+`forward_fill` runs it through the scalable two-pass variant a 100 TB run
+needs: one deterministic bucket map over an ordinal of the order key, one
+bucket exchange, no sampler and no pin.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, StringType
 
 
 def forward_fill(
@@ -26,11 +29,11 @@ def forward_fill(
     The reference computes the global fill as ONE unpartitioned window
     (pyspark_dag2.py:375-379) — a single-task sort. This keeps those
     exact semantics but executes them through the distributed two-pass
-    range-bucket algorithm (forward_fill_scalable): for a TOTAL order
-    key the two are equivalent row-for-row (the oracle checks it), and
-    the fill stage runs as many tasks as buckets instead of one
-    (VERDICT r5 item 6). `single_task=True` runs the literal reference
-    plan — the reference the tests compare against.
+    algorithm over forward_fill_scalable's ordinal bucket map: for a
+    TOTAL order key the two are equivalent row-for-row (the oracle
+    checks it), and the fill stage runs as many tasks as buckets
+    instead of one (VERDICT r5 item 6). `single_task=True` runs the
+    literal reference plan — the reference the tests compare against.
 
     Under a NON-total order key ties make `last(ignorenulls)` order-
     dependent in both shapes — the single-task plan is just as
@@ -49,98 +52,60 @@ def forward_fill_scalable(
     order_by: Sequence[str],
     target: str,
     num_buckets: int | None = None,
-    bucketer: str = "range",
 ) -> DataFrame:
     """E1 at scale — distributed global forward-fill without a single-task sort.
 
     Two-pass algorithm over ordered buckets of the order key:
-    1. partition rows into `num_buckets` ordered buckets (default:
-       2x the session's shuffle parallelism — a fixed large constant
-       wastes range-sampling time on small clusters, measured 4x at
-       sf0.1 with 256 buckets on 32 cores);
-    2. per bucket, compute the bucket-local fill plus the bucket's last
-       non-null value; broadcast the tiny per-bucket "carry" table and fill
-       each bucket's leading nulls from the nearest preceding bucket's carry.
+    1. map rows to `num_buckets` ordered buckets (default: 2x the
+       session's shuffle parallelism) and compute the bucket-local fill;
+    2. broadcast the tiny per-bucket "carry" table and fill each
+       bucket's leading nulls from the nearest preceding bucket's carry.
+    Equivalent to the global window for a total order key, at the cost
+    of one hash exchange on the bucket id instead of a 1-task sort.
 
-    Equivalent to the global window for a total order key; shuffle cost is
-    one ordered partitioning instead of a 1-task sort.
+    Bucket map (`_bucket_expr`): floor((v - lo) * B / span) over a
+    monotone ordinal v of the leading order key, bounds from one MIN/MAX
+    aggregate. ANY monotone map gives the same fill, because bucket-local
+    fill plus nearest preceding carry replays the global scan order; a
+    skewed key costs balance (worst case the 1-task shape), not
+    correctness. An integral key is its own ordinal. A string key maps
+    to the 7 UTF-8 bytes after the common byte prefix of MIN and MAX,
+    zero-padded: every key between them shares that prefix and Spark's
+    default string order is byte order, so the map is monotone. Other
+    key types raise TypeError. The bucket id is a pure function of the
+    row, so there is no sampler pass and no pin.
 
     The carry is the filled value on the bucket's last row IN THE ORDER
-    THE FILL USED: `max_by(target, __rn)`, with `__rn` a row_number over
-    the fill's own partition+sort (one Sort, one Window node). A max_by
-    on the raw order key would pick an arbitrary row of a tied final key
-    group and diverge on mixed-value ties at bucket boundaries (caught by
-    the sf0.01 oracle at a duplicated (orderkey, linenumber)).
+    THE FILL USED: max_by over `__rn`, a row_number over the fill's own
+    partition+sort (one Sort, one Window node). A max_by on the raw order
+    key would pick an arbitrary row of a tied final key group and diverge
+    on mixed-value ties at bucket boundaries (caught by the sf0.01 oracle
+    at a duplicated (orderkey, linenumber)).
 
-    `bucketer` picks how the ordered buckets are formed; it changes only
-    the `__bucket` expression and whether the filled frame is pinned:
-
-    - "range" (default, any key type / any distribution):
-      `repartitionByRange` — percentile split points from the range
-      partitioner's sampling pass, so bucket sizes are balanced under
-      ANY key distribution. Costs one extra execution of the input
-      (the sampler) and a persist barrier: the sampled partition id is
-      nondeterministic across executions, so the filled frame must be
-      pinned before the carry aggregate reads it (an unpinned diamond
-      would also scan and range-shuffle the source twice).
-    - "affine" (leading order key integral AND roughly uniform — a
-      data contract the caller owns): bucket = floor((v - min(v)) *
-      B / span), a deterministic column expression, monotone in v
-      (IEEE double divide + floor are monotone; ANY monotone map
-      yields the same fill because bucket-local fill + nearest
-      preceding carry replays the global scan order). The bounds come
-      from one MIN/MAX aggregate over the single key column — columnar
-      and footer-friendly, instead of the sampler's full pass over the
-      projected input — and because the bucket id is a pure function
-      of the data, no pin is needed: the fill branch and the carry
-      branch plan the IDENTICAL scan->project->exchange subtree, so the
-      planner reuses one exchange (ReusedExchange with AQE off; the AQE
-      stage cache at runtime) and the carry re-reads that shuffle
-      output instead of a persisted copy of the filled frame. Under a
-      skewed key the buckets go unbalanced (worst case: the global
-      window's own 1-task shape) — that is why "range" stays the
-      default and the affine form is opt-in per call site.
+    The carry aggregates a struct of EVERY input column, not just
+    `target`: otherwise column pruning narrows the carry branch below
+    the fill branch on any input wider than key + target, and the two
+    plan different bucket exchanges. With it both branches plan the
+    identical scan->project->exchange subtree, so the carry reads the
+    fill's own shuffle output (ReusedExchange): one shuffle write, and
+    one map output ordering the ties of both passes. A consumer that
+    projects columns away above the fill narrows only the fill branch
+    and brings the second exchange back; drop them before the fill.
     """
     if num_buckets is None:
         num_buckets = 2 * int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
         )
-    if bucketer == "affine":
-        key = order_by[0]
-        bounds = df.select(F.min(key).alias("lo"), F.max(key).alias("hi")).first()
-        lo, hi = bounds["lo"], bounds["hi"]
-        if lo is None:
-            # empty input or all-null leading key: one bucket
-            bucket_expr = F.lit(0)
-        else:
-            span = float(hi) - float(lo) + 1.0
-            bucket_expr = F.floor(
-                (F.col(key).cast("double") - float(lo))
-                * float(num_buckets)
-                / span
-            ).cast("int")
-        # nulls sort first under the default ASC ordering
-        bucketed = df.withColumn(
-            "__bucket",
-            F.when(F.col(key).isNull(), F.lit(-1)).otherwise(bucket_expr),
-        )
-    else:
-        bucketed = df.repartitionByRange(num_buckets, *order_by).withColumn(
-            "__bucket", F.spark_partition_id()
-        )
+    bucketed = df.withColumn("__bucket", _bucket_expr(df, order_by[0], num_buckets))
     rank_w = Window.partitionBy("__bucket").orderBy(*order_by)
     local_w = rank_w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     filled_local = bucketed.withColumn(
         target, F.last(target, ignorenulls=True).over(local_w)
     ).withColumn("__rn", F.row_number().over(rank_w))
-    if bucketer != "affine":
-        from ..cache import pin
-
-        filled_local = pin(filled_local)
     # num_buckets rows — trivially small; null only if the whole bucket
     # saw no non-null
     carries = filled_local.groupBy("__bucket").agg(
-        F.max_by(F.col(target), F.col("__rn")).alias("__carry")
+        F.max_by(F.struct(*df.columns), F.col("__rn"))[target].alias("__carry")
     )
     prev_w = (
         Window.orderBy("__bucket")
@@ -156,6 +121,39 @@ def forward_fill_scalable(
     )
 
 
+def _bucket_expr(df: DataFrame, key: str, num_buckets: int) -> Column:
+    """forward_fill_scalable's bucket id for leading order key `key`:
+    `floor((v - lo) * B / span)` over the key's monotone ordinal `v`,
+    -1 for a NULL key, 0 for every row when the key has no non-NULL."""
+    key_type = df.schema[key].dataType
+    if not isinstance(key_type, (IntegralType, StringType)):
+        raise TypeError(
+            f"forward_fill_scalable: order key {key!r} is {key_type.simpleString()};"
+            " only integral and string keys have a bucket map"
+        )
+    bounds = df.select(F.min(key).alias("lo"), F.max(key).alias("hi")).first()
+    lo, hi = bounds["lo"], bounds["hi"]
+    if lo is None:
+        # empty input or all-null leading key: one bucket
+        return F.lit(0)
+    ordinal = F.col(key)
+    if isinstance(key_type, StringType):
+        # the 7 bytes after the common byte prefix of lo and hi
+        a, b = lo.encode("utf-8"), hi.encode("utf-8")
+        n = next(
+            (i for i, (x, y) in enumerate(zip(a, b)) if x != y), min(len(a), len(b))
+        )
+        suffix = F.substring(F.encode(ordinal, "utf-8"), n + 1, 7)
+        ordinal = F.conv(F.rpad(F.hex(suffix), 14, "0"), 16, 10).cast("long")
+        lo, hi = (int.from_bytes(v[n:n + 7].ljust(7, b"\0"), "big") for v in (a, b))
+    span = float(hi) - float(lo) + 1.0
+    bucket = F.floor(
+        (ordinal.cast("double") - float(lo)) * float(num_buckets) / span
+    ).cast("int")
+    # nulls sort first under the default ASC ordering
+    return F.when(F.col(key).isNull(), F.lit(-1)).otherwise(bucket)
+
+
 def global_rank_scalable(
     df: DataFrame,
     order_by: Sequence[str],
@@ -164,8 +162,10 @@ def global_rank_scalable(
 ) -> DataFrame:
     """Distributed global row_number over a TOTAL UNIQUE order — the
     scalable form of `row_number() OVER (ORDER BY ...)` (which Spark
-    executes as a single-task sort, the e1 caveat). Same two-pass
-    range-bucket scheme as forward_fill_scalable:
+    executes as a single-task sort, the e1 caveat). A two-pass
+    range-bucket scheme; unlike forward_fill_scalable's deterministic
+    bucket map, it takes its split points from the range partitioner's
+    sampler, so it works for any order-key type:
 
     1. range-partition by the order key (one range shuffle — the same
        cost a production layout job pays, zorder.py rationale);

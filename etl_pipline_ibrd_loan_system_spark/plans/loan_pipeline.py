@@ -138,16 +138,19 @@ def encode_stage(
     """B6 fill + B7 BK encodes + E1 forward-fill + B8 derived amounts.
 
     `bk_maps`: source column -> {value: business key int}; emits `<col>_bk`.
+    The unused columns are dropped BEFORE the fill: every column the
+    fill's input carries is still referenced after it, so the fill and
+    its carry plan one bucket exchange (forward_fill_scalable).
     """
     out = cleaning.fill_nulls(df, "not_specified", ["borrower", "guarantor"])
     for src, mapping in bk_maps.items():
         out = cleaning.map_encode(out, dict(mapping), source=src, dest=f"{src}_bk")
-    out = forward_fill(out, ["loan_number"], "project_name_")
+    out = forward_fill(out.drop("sold_3rd_party", "loans_held"),
+                       ["loan_number"], "project_name_")
     out = cleaning.derived_sum(out, "repaid", ["repaid_to_ibrd", "repaid_3rd_party"],
                                drop_inputs=True)
-    out = cleaning.derived_sum(out, "due", ["due_to_ibrd", "due_3rd_party"],
-                               drop_inputs=True)
-    return out.drop("sold_3rd_party", "loans_held")
+    return cleaning.derived_sum(out, "due", ["due_to_ibrd", "due_3rd_party"],
+                                drop_inputs=True)
 
 
 def run_clean_pipeline(

@@ -503,6 +503,9 @@ _E1_SQL = """
 
 @query("e1_forward_fill", sql=_E1_SQL)
 def e1_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reference's global fill through `forward_fill`, which runs
+    the same bucketed two-pass plan as e1b (buckets over the integral
+    l_orderkey, one bucket exchange, no sampler, no pin)."""
     from ..operators.window_ops import forward_fill
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -516,16 +519,10 @@ def e1_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("e1b_forward_fill_scalable", sql=_E1_SQL)
 def e1b_forward_fill_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same semantics as e1 via the distributed bucketed two-pass
-    algorithm — oracle-checked equal to the global window.
-
-    Data contract for `bucketer="affine"`: l_orderkey is an integral
-    key that TPC-H dbgen assigns densely and uniformly over its range
-    (every oracle SF holds it), so affine buckets stay balanced and the
-    fill skips the range sampler's extra pass over the input and the
-    persist barrier the sampled partition ids would require. e1 keeps
-    the distribution-agnostic range form (the two plans are
-    oracle-checked against the same SQL)."""
+    """Same semantics as e1, calling `forward_fill_scalable` directly:
+    e1 and e1b plan the same fill and are oracle-checked against the
+    same SQL. TPC-H dbgen assigns l_orderkey densely and uniformly over
+    its range, so the buckets over it stay balanced."""
     from ..operators.window_ops import forward_fill_scalable
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -534,9 +531,7 @@ def e1b_forward_fill_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("l_returnflag"))
         .alias("flag_filled"),
     )
-    return forward_fill_scalable(
-        li, ["l_orderkey", "l_linenumber"], "flag_filled", bucketer="affine"
-    )
+    return forward_fill_scalable(li, ["l_orderkey", "l_linenumber"], "flag_filled")
 
 
 # --- E2/F4: top-N per group (dashboard sort-by-measure + rank) -----------

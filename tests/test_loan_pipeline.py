@@ -69,7 +69,7 @@ BK_MAPS = {
 
 
 @pytest.fixture(scope="module")
-def staging(spark):
+def raw(spark):
     rows = [
         _raw_row("IBRD00010", project_name="Power Grid"),
         _raw_row("IBRD00020", project_name=None),           # forward-fill target
@@ -77,7 +77,11 @@ def staging(spark):
         _raw_row("IBRD00040", period="15-Aug-2023"),         # off-snapshot -> dropped
         _raw_row("IBRD00050", borrower="Direct Borrower"),   # overwritten by country pair
     ]
-    raw = spark.createDataFrame(rows, RAW_SCHEMA)
+    return spark.createDataFrame(rows, RAW_SCHEMA)
+
+
+@pytest.fixture(scope="module")
+def staging(raw):
     return lp.run_clean_pipeline(raw, MAPS, BK_MAPS)
 
 
@@ -106,6 +110,59 @@ def test_standardize_and_encode(staging):
 def test_forward_fill_project_name(staging):
     by_loan = {r.loan_number: r for r in staging.collect()}
     assert by_loan["ibrd00020"].project_name_ == "power grid"
+
+
+def test_clean_pipeline_leaves_no_pins(spark, raw):
+    """The project-name forward fill buckets by a deterministic map of
+    loan_number, so nothing needs a cache: a clean run adds no
+    registered pin and no persisted RDD."""
+    from etl_pipline_ibrd_loan_system_spark import cache
+
+    sc = spark.sparkContext
+    pins, rdds = len(cache._PINNED), set(sc._jsc.getPersistentRDDs())
+    lp.run_clean_pipeline(raw, MAPS, BK_MAPS).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    assert len(cache._PINNED) == pins
+    assert set(sc._jsc.getPersistentRDDs()) == rdds
+
+
+def test_csv_dictionaries_feed_the_clean_pipeline(spark, raw, staging, tmp_path):
+    """A5/B13: the reference's two-column cleaning CSVs (header row,
+    mixed case, pyspark_dag2.py:139-264) load as lowercased dicts and
+    frames, and the dicts drive the clean pipeline like the literal
+    maps."""
+    from etl_pipline_ibrd_loan_system_spark.sources.csv_dict import (
+        read_dict_csv,
+        read_dict_df,
+    )
+
+    csvs = {
+        "status": "Status,Standard\nFully Repaid,Repaid\nOrphan\n",
+        "type": "Type,Standard\nFSL,Fixed Spread Loan\n",
+        "country": "Country,Standard\nFrance,France\nFrnace,FRANCE\n",
+        "region": "Region,Standard\nEUROPE,Europe and Central Asia\n",
+        "borrower_by_country": "Country,Borrower\n"
+                               "France,Ministry of Finance (France)\n",
+    }
+    paths = {}
+    for name, text in csvs.items():
+        paths[name] = tmp_path / f"{name}.csv"
+        paths[name].write_text(text, encoding="utf-8")
+    maps = {name: read_dict_csv(str(path)) for name, path in paths.items()}
+    # the short row has no value, so the dict reader skips it
+    assert maps == MAPS
+    frame = read_dict_df(spark, str(paths["status"]))
+    assert frame.columns == ["key", "value"]
+    # the DataFrame reader keeps it with a NULL value
+    assert sorted(map(tuple, frame.collect())) == [
+        ("fully repaid", "repaid"), ("orphan", None),
+    ]
+    got = lp.run_clean_pipeline(raw, maps, BK_MAPS)
+    key = "loan_number"
+    assert sorted(got.collect(), key=lambda r: r[key]) == sorted(
+        staging.collect(), key=lambda r: r[key]
+    )
 
 
 def test_star_build_and_fact(spark, staging):

@@ -21,53 +21,69 @@ def _sparse_df(spark, n=500, gap=7):
     return spark.createDataFrame(rows, ["k", "val"])
 
 
-@pytest.mark.parametrize("bucketer", ["range", "affine"])
-def test_forward_fill_matches_scalable(spark, bucketer):
-    df = _sparse_df(spark)
+# unique string keys (a total order), each set with a NULL key; the
+# string bucket map works on the bytes after the common prefix of MIN/MAX
+_STRING_KEYS = {
+    "loan_numbers": [f"IBRD{i:05d}" for i in range(0, 1200, 3)],
+    "prefixes": ["", "a", "ab", "abc", "abd", "abda", "b", "ba", "bab", "c"],
+    "utf8": ["", "e", "é", "éa", "ü", "ÿ", "z", "日", "日本", "日本語", "😀"],
+    "shared_prefix": ["x" * 30 + t for t in ("", "a", "ab", "b", "é", "zz")],
+}
+
+
+@pytest.mark.parametrize("keys", ["long", *_STRING_KEYS])
+def test_forward_fill_matches_scalable(spark, keys):
+    if keys == "long":
+        df = _sparse_df(spark)
+    else:
+        ks = [None, *_STRING_KEYS[keys]]
+        rows = [(k, None if i % 3 else f"v{i}") for i, k in enumerate(ks)]
+        df = spark.createDataFrame(rows, "k string, val string")
     a = forward_fill(df, ["k"], "val", single_task=True).orderBy("k").collect()
     b = (
-        forward_fill_scalable(df, ["k"], "val", num_buckets=8, bucketer=bucketer)
+        forward_fill_scalable(df, ["k"], "val", num_buckets=8)
         .orderBy("k")
         .collect()
     )
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
-@pytest.mark.parametrize("bucketer", ["range", "affine"])
-def test_forward_fill_carry_uses_fill_order_on_tied_boundary(spark, bucketer):
+@pytest.mark.parametrize("key", [int, "k{}".format], ids=["long", "string"])
+def test_forward_fill_carry_uses_fill_order_on_tied_boundary(spark, key):
     """Regression for the sf0.01 oracle catch: a DUPLICATED order key
     with differing non-null values sitting on a bucket's last row must
     hand the next bucket's leading nulls the value the fill itself saw
     last (stable scan order), not an arbitrary row of the tied group.
-    keys 0..9 with num_buckets=5 put a bucket boundary between 5 and 6
-    under both bucketers; k=5 is duplicated ('R' first, 'N' second in
-    scan order), k=6 is null and must fill to 'N'."""
-    rows = [(0, "a"), (1, None), (2, "b"), (3, None), (4, "c"),
-            (5, "R"), (5, "N"), (6, None), (7, None), (8, "d"), (9, None)]
-    df = spark.createDataFrame(rows, ["k", "val"]).coalesce(1)
-    if bucketer == "range":
-        # the sampled split points must leave k=5 as its bucket's last
-        # key, or the case would not cross a bucket boundary
-        part = {
-            r.k: r.p
-            for r in df.repartitionByRange(5, "k")
-            .select("k", F.spark_partition_id().alias("p"))
-            .collect()
-        }
-        assert max(k for k in part if part[k] == part[5]) == 5
-        assert part[6] != part[5]
-    got = forward_fill_scalable(
-        df, ["k"], "val", num_buckets=5, bucketer=bucketer
+    keys 0..9 (or "k0".."k9") with num_buckets=5 put a bucket boundary
+    between 5 and 6; 5 is duplicated ('R' first, 'N' second in scan
+    order), 6 is null and must fill to 'N'."""
+    from etl_pipline_ibrd_loan_system_spark.operators.window_ops import (
+        _bucket_expr,
     )
+
+    rows = [(key(k), v) for k, v in [
+        (0, "a"), (1, None), (2, "b"), (3, None), (4, "c"),
+        (5, "R"), (5, "N"), (6, None), (7, None), (8, "d"), (9, None)]]
+    k5, k6 = key(5), key(6)
+    df = spark.createDataFrame(rows, ["k", "val"]).coalesce(1)
+    # the bucket map must leave 5 as its bucket's last key, or the case
+    # would not cross a bucket boundary
+    part = {
+        r.k: r.b
+        for r in df.select("k", _bucket_expr(df, "k", 5).alias("b")).collect()
+    }
+    assert max(k for k in part if part[k] == part[k5]) == k5
+    assert part[k6] != part[k5]
+    got = forward_fill_scalable(df, ["k"], "val", num_buckets=5)
     ref = forward_fill(df, ["k"], "val", single_task=True)
-    vals = {r.k: r.val for r in got.collect() if r.k != 5}
-    assert vals == {r.k: r.val for r in ref.collect() if r.k != 5}
-    assert vals == {0: "a", 1: "a", 2: "b", 3: "b", 4: "c",
-                    6: "N", 7: "N", 8: "d", 9: "d"}
-    assert sorted(r.val for r in got.collect() if r.k == 5) == ["N", "R"]
+    vals = {r.k: r.val for r in got.collect() if r.k != k5}
+    assert vals == {r.k: r.val for r in ref.collect() if r.k != k5}
+    want = {0: "a", 1: "a", 2: "b", 3: "b", 4: "c", 6: "N", 7: "N", 8: "d", 9: "d"}
+    assert vals == {key(k): v for k, v in want.items()}
+    assert sorted(r.val for r in got.collect() if r.k == k5) == ["N", "R"]
 
 
-def test_forward_fill_affine_edge_keys(spark):
+def test_forward_fill_edge_keys(spark):
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType,
     )
@@ -78,19 +94,14 @@ def test_forward_fill_affine_edge_keys(spark):
     ])
     # empty input
     empty = spark.createDataFrame([], schema)
-    assert (
-        forward_fill_scalable(empty, ["k"], "val", bucketer="affine").count()
-        == 0
-    )
+    assert forward_fill_scalable(empty, ["k"], "val").count() == 0
     # null keys sort first: the null-key row's value seeds the fill
     df = spark.createDataFrame(
         [(None, "z"), (1, None), (2, None), (3, "a"), (4, None)], schema
     )
     got = {
         r.k: r.val
-        for r in forward_fill_scalable(
-            df, ["k"], "val", num_buckets=4, bucketer="affine"
-        ).collect()
+        for r in forward_fill_scalable(df, ["k"], "val", num_buckets=4).collect()
     }
     assert got == {None: "z", 1: "z", 2: "z", 3: "a", 4: "a"}
     # all-null leading key: one bucket, same answer as the single-task
@@ -102,9 +113,7 @@ def test_forward_fill_affine_edge_keys(spark):
 
     got = Counter(
         (r.k, r.val)
-        for r in forward_fill_scalable(
-            allnull, ["k"], "val", bucketer="affine"
-        ).collect()
+        for r in forward_fill_scalable(allnull, ["k"], "val").collect()
     )
     ref = Counter(
         (r.k, r.val)
@@ -113,6 +122,12 @@ def test_forward_fill_affine_edge_keys(spark):
         ).collect()
     )
     assert got == ref
+    # no bucket map for any other key type
+    with pytest.raises(TypeError, match="double"):
+        forward_fill_scalable(
+            spark.createDataFrame([(1.5, "a")], "k double, val string"),
+            ["k"], "val",
+        )
 
 
 def test_forward_fill_idempotent(spark):

@@ -49,61 +49,76 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
-def test_e1_fill_stage_is_distributed(spark, sf_dir, registry):
-    """e1 keeps the reference's global-fill SEMANTICS but must execute
-    them through the range-bucketed two-pass plan (VERDICT r5 item 6):
-    the fill stage runs one task per bucket, never one global task, and
-    the plan shows the range repartition feeding bucket-local windows."""
-    df = registry["e1_forward_fill"](spark, sf_dir)
-    plan = _plan(df)
-    assert "rangepartitioning" in plan.lower(), "e1 lost the range-bucket pass"
-    # the full-data window must be partitioned by the range bucket — the
-    # only legal unpartitioned window is the num_buckets-row carry table
-    assert "windowspecdefinition(__bucket" in plan, (
-        "e1's fill window is no longer bucket-partitioned"
-    )
-
-
-def test_e1b_affine_fill_has_no_sampler_and_no_pin(spark, sf_dir, registry):
-    """e1b's affine-bucket form (optimization r12): the fill must stay
-    bucket-partitioned (never one global task), but the ordered buckets
-    come from a deterministic affine map of l_orderkey — so the plan
-    carries NO rangepartitioning exchange (no sampler pass over the
-    input) and NO InMemoryTableScan (the deterministic bucket id makes
-    the persist barrier unnecessary: both consumers share one reusable
-    hash exchange)."""
-    df = registry["e1b_forward_fill_scalable"](spark, sf_dir)
-    plan = _plan(df)
-    assert "windowspecdefinition(__bucket" in plan, (
-        "e1b's fill window is no longer bucket-partitioned"
-    )
-    assert "rangepartitioning" not in plan.lower(), (
-        "e1b regressed to the sampled range-bucket pass"
-    )
-    assert "hashpartitioning(__bucket" in plan, (
-        "e1b's bucket shuffle is no longer a deterministic hash exchange"
-    )
-    assert "InMemoryTableScan" not in plan, (
-        "e1b re-grew a persist barrier"
-    )
-    # Without the pin, the carry matches the fill on tied keys only
-    # because both read ONE __bucket shuffle: the AQE-final plan must
-    # execute a single bucket exchange and reuse it for the carry.
+def _final_plan(df) -> str:
+    """The AQE-final physical plan after running `df`."""
     df.collect()
     final = df._jdf.queryExecution().executedPlan().toString()
     final = final.split("== Initial Plan ==")[0]
     assert "isFinalPlan=true" in final
+    return final
+
+
+def _assert_one_bucket_exchange(final: str) -> None:
+    """The fill and its carry read ONE `__bucket` shuffle: one executed
+    bucket exchange plus its reuse, and neither a sampler (range
+    partitioning) nor a persist barrier."""
     bucket_exchanges = [
         line for line in final.splitlines()
         if "Exchange hashpartitioning(__bucket" in line
         and "ReusedExchange" not in line
     ]
     assert len(bucket_exchanges) == 1, (
-        "e1b's fill and carry no longer share one bucket exchange"
+        "the fill and the carry no longer share one bucket exchange"
     )
-    assert "ReusedExchange" in final, (
-        "e1b's carry re-shuffles instead of reusing the fill's exchange"
+    assert final.count("ReusedExchange") == 1, (
+        "the carry re-shuffles instead of reusing the fill's exchange"
     )
+    assert "InMemoryTableScan" not in final, "the fill re-grew a persist barrier"
+    assert "rangepartitioning" not in final.lower(), (
+        "the fill regressed to the sampled range-bucket pass"
+    )
+
+
+@pytest.mark.parametrize("name", ["e1_forward_fill", "e1b_forward_fill_scalable"])
+def test_e1_fill_has_no_sampler_and_no_pin(spark, sf_dir, registry, name):
+    """e1 and e1b plan the same fill: it must stay bucket-partitioned
+    (VERDICT r5 item 6: never one global task), and the ordered buckets
+    come from a deterministic map of l_orderkey — so there is no
+    rangepartitioning exchange (no sampler pass over the input) and no
+    InMemoryTableScan (both consumers share one reusable hash exchange
+    instead of a persist barrier)."""
+    df = registry[name](spark, sf_dir)
+    plan = _plan(df)
+    assert "windowspecdefinition(__bucket" in plan, (
+        f"{name}'s fill window is no longer bucket-partitioned"
+    )
+    assert "hashpartitioning(__bucket" in plan, (
+        f"{name}'s bucket shuffle is no longer a deterministic hash exchange"
+    )
+    # Without a pin, the carry reads the fill's tie order only because
+    # both read ONE __bucket shuffle: the AQE-final plan must execute a
+    # single bucket exchange and reuse it for the carry.
+    _assert_one_bucket_exchange(_final_plan(df))
+
+
+def test_forward_fill_wide_input_shares_one_bucket_exchange(spark):
+    """Column pruning must not narrow the carry branch below the fill
+    branch: on an input with many columns beside the key and the target
+    (the loan pipeline fills a 30-column frame) both still read one
+    bucket exchange."""
+    from etl_pipline_ibrd_loan_system_spark.operators.window_ops import (
+        forward_fill_scalable,
+    )
+
+    extra = [f"c{j}" for j in range(12)]
+    rows = [
+        (f"IBRD{i % 37:05d}", None if i % 4 else f"p{i}", *range(i, i + 12))
+        for i in range(200)
+    ]
+    df = spark.createDataFrame(rows, ["loan_number", "project", *extra])
+    out = forward_fill_scalable(df, ["loan_number"], "project", num_buckets=4)
+    assert out.columns == df.columns
+    _assert_one_bucket_exchange(_final_plan(out))
 
 
 def test_tx7_no_window_exec(spark, sf_dir, registry):
