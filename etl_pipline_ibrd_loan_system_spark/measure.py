@@ -11,7 +11,9 @@ caches and reading the metrics happen after the clock stops.
 The stage metrics come from the JVM status store, so they cover every job
 of the group, not only the final action's plan. The status store works
 with `spark.ui.enabled=false`; it keeps the last `spark.ui.retainedStages`
-stages, so the metrics are read as soon as the pass ends. A stage whose
+stages, so the metrics are read as soon as the pass ends; it evicts
+skipped stages first, so a stage of the pass it no longer holds counts
+as skipped. A stage whose
 shuffle output an earlier stage already wrote (AQE runs each shuffle map
 stage as its own job, and the result job then skips it) is counted under
 `skipped_stages`, not `stages`, and carries no work. A stage that several
@@ -55,6 +57,12 @@ def _stage_metrics(sc, group: str) -> dict:
     m = {"jobs": len(jobs), "stages": 0, "skipped_stages": 0,
          "shuffle_write_mb": 0.0, "spill_mb": 0.0}
     for sid in stage_ids:
+        # the store evicts stages with no completion time, i.e. skipped
+        # ones, before any stage that ran, so a stage of this pass that it
+        # no longer holds was skipped
+        if tracker.getStageInfo(sid) is None:
+            m["skipped_stages"] += 1
+            continue
         d = store.lastStageAttempt(sid)
         if d.status().toString() == "SKIPPED":
             m["skipped_stages"] += 1

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -60,19 +60,27 @@ def build_dimension(
     ).withColumn("source_system_code", F.lit(source_system_code))
 
 
+def date_sk(date: Column) -> Column:
+    """DimDate's surrogate key of a date column: its `yyyymmdd` as int.
+    A fact's role-playing date key is this projection of its own date, so
+    it needs no lookup into DimDate."""
+    return (
+        F.year(date) * 10000 + F.month(date) * 100 + F.dayofmonth(date)
+    ).cast("int")
+
+
 def build_date_dimension(
     dates: DataFrame, date_col: str, sk_col: str = "date_sk"
 ) -> DataFrame:
     """DimDate (`project SSIS::loan_fact.dtsx:74`): distinct calendar dates
-    with an int SK (yyyymmdd — deterministic, distributed, no global sort)
-    plus the year attribute the dashboard's date hierarchy uses."""
+    with an int SK (`date_sk`: yyyymmdd — deterministic, distributed, no
+    global sort) plus the year attribute the dashboard's date hierarchy
+    uses."""
     d = dates.select(F.col(date_col).cast("date").alias("date")).where(
         F.col("date").isNotNull()
     ).distinct()
     return d.select(
-        (F.year("date") * 10000 + F.month("date") * 100 + F.dayofmonth("date"))
-        .cast("int")
-        .alias(sk_col),
+        date_sk(F.col("date")).alias(sk_col),
         "date",
         F.year("date").alias("year"),
     )

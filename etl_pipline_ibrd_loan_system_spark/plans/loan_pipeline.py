@@ -33,7 +33,7 @@ from pyspark.util import inheritable_thread_target
 
 from ..operators import cleaning
 from ..operators.scd import scd2_apply, scd2_init
-from ..operators.star import build_date_dimension, build_fact
+from ..operators.star import build_date_dimension, build_fact, date_sk
 from ..operators.window_ops import forward_fill
 
 # proper-case literals: the filter runs before lowercase-normalize, exactly
@@ -314,46 +314,43 @@ def load_star_snaptable(
     spark, staging: DataFrame, root: str, version: int | None = None
 ) -> dict[str, DataFrame]:
     """Snapshot-read the 7 dimensions back (CURRENT, or time travel to
-    `version`) plus DimDate rebuilt from staging — the dict
-    `build_fact_loan` consumes. Readers resolve one immutable manifest
-    per dim: a concurrent merge commit can never tear the fact build's
-    lookups."""
+    `version`) — the dict `build_fact_loan` consumes. Readers resolve one
+    immutable manifest per dim: a concurrent merge commit can never tear
+    the fact build's lookups. `staging` is unused: the fact keys its
+    dates by projection, so no DimDate is rebuilt from it."""
     import os
 
     from ..sources import snaptable
 
-    dims: dict[str, DataFrame] = {
+    return {
         f"dim_{name}": snaptable.read(
             spark, os.path.join(root, f"dim_{name}"), version=version
         )
         for name in DIM_SPECS
     }
-    dates = None
-    for c in DATE_FK_COLS:
-        part = staging.select(F.to_date(F.col(c), "dd-MMM-yyyy").alias("d"))
-        dates = part if dates is None else dates.unionByName(part)
-    dims["dim_date"] = build_date_dimension(dates, "d")
-    return dims
 
 
 def build_fact_loan(staging: DataFrame, dims: Mapping[str, DataFrame]) -> DataFrame:
-    """The 10-lookup fact cascade (`project SSIS::loan_fact.dtsx`): 6 dim
-    SKs + 4 role-playing date SKs, then SK+measure projection. All lookups
-    broadcast; Catalyst collapses the cascade into one stage (SURVEY §3.3)."""
+    """The fact cascade (`project SSIS::loan_fact.dtsx`): 7 dimension
+    lookups (current rows) + 4 role-playing date SKs, then SK+measure
+    projection. All lookups broadcast; Catalyst collapses the cascade
+    into one stage (SURVEY §3.3).
+
+    DimDate's SK is the date's own `yyyymmdd` (`date_sk`), so each date
+    key is a projection, not a lookup; the lookup's inner-join drop of a
+    row whose date is NULL or unparseable stays as a filter."""
     fact = staging
     for c in DATE_FK_COLS:
-        fact = fact.withColumn(c, F.to_date(F.col(c), "dd-MMM-yyyy"))
+        d = F.to_date(F.col(c), "dd-MMM-yyyy")
+        fact = fact.where(d.isNotNull()).withColumn(f"{c}_sk", date_sk(d))
     lookups = []
     for name, (bk, _attrs, _t1, _t2) in DIM_SPECS.items():
         dim = dims[f"dim_{name}"].filter(F.col("is_current"))
         lookups.append((dim, {bk: bk}, {f"pk_{name}_sk": f"fk_{name}"}))
-    dimdate = dims["dim_date"]
-    for c in DATE_FK_COLS:
-        lookups.append((dimdate, {c: "date"}, {"date_sk": f"{c}_sk"}))
     out = build_fact(
         fact,
         lookups,
-        measure_cols=MEASURE_COLS,
+        measure_cols=[f"{c}_sk" for c in DATE_FK_COLS] + MEASURE_COLS,
         key_cols=["loan_number"],
     )
     # destination-metadata narrowing (FACT_SINK_CASTS): applied at the

@@ -373,22 +373,21 @@ def c2_lookup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def c3_role_playing_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.star import build_date_dimension, lookup_join
+    """Each role's date key is the `date_sk` projection of its own date;
+    the oracle keeps the DimDate join, so a match checks the two agree
+    (a NULL date drops, as the inner join drops it)."""
+    from ..operators.star import date_sk
 
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
-    dates = orders.select(F.col("o_orderdate").alias("d")).unionByName(
-        li.select(F.col("l_shipdate").alias("d"))
+    ship, order = F.col("l_shipdate").cast("date"), F.col("o_orderdate").cast("date")
+    fact = li.join(orders, li.l_orderkey == orders.o_orderkey).where(
+        ship.isNotNull() & order.isNotNull()
     )
-    dimdate = build_date_dimension(dates, "d")
-    fact = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
+    return fact.select(
         li.l_orderkey, "l_linenumber",
-        F.col("l_shipdate").cast("date").alias("ship_date"),
-        F.col("o_orderdate").cast("date").alias("order_date"),
+        date_sk(ship).alias("ship_date_sk"), date_sk(order).alias("order_date_sk"),
     )
-    fact = lookup_join(fact, dimdate, {"ship_date": "date"}, {"date_sk": "ship_date_sk"})
-    fact = lookup_join(fact, dimdate, {"order_date": "date"}, {"date_sk": "order_date_sk"})
-    return fact.select("l_orderkey", "l_linenumber", "ship_date_sk", "order_date_sk")
 
 
 # --- D1: DISTINCT projection (loan_type_dim.dtsx:569) --------------------
@@ -791,9 +790,10 @@ def b14_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- A1b: Spark 4 Python DataSource paged ingest --------------------------
-# (sources/rest_datasource.py — pages become input partitions; the
-# reference fetched them sequentially on the driver, pyspark_dag2.py:52-77)
+# --- A1b: paged ingest at scale ---------------------------------------------
+# (sources/rest_datasource.py — staged pages land through Spark's JSON file
+# source; the reference fetched them sequentially on the driver,
+# pyspark_dag2.py:52-77)
 
 
 @query(

@@ -69,9 +69,9 @@ def http_json_page_fetcher(
 
     The fetch is DRIVER-side: one page per micro-batch is the reference's
     cadence, and a page (50k rows) is driver-sized by design. Bulk
-    backfills should use rest_datasource's one-partition-per-page reader
-    (HTTP mode, batch or streaming — the partitioned stream reader
-    fetches pages executor-side too) so executors fetch concurrently."""
+    backfills over HTTP should use rest_datasource's one-partition-per-page
+    reader (`read_pages_http`, or the partitioned stream reader in `url`
+    mode) so executors fetch concurrently."""
     from pyspark.sql.types import StructType
 
     st = StructType.fromDDL(schema) if isinstance(schema, str) else schema

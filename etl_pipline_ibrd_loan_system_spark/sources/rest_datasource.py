@@ -1,20 +1,23 @@
-"""Spark 4 Python DataSource for paged ingestion (SURVEY §2.A A1's
-at-scale path).
+"""Paged ingestion (SURVEY §2.A A1's at-scale path).
 
 The reference fetches API pages sequentially on the driver
 (`pyspark_dag2.py:52-77`: one `requests.get` per `top`/`skip` page,
-accumulated via XCom). This DataSource turns each page into an INPUT
-PARTITION: executors fetch pages in parallel, Spark handles retries
-per-task, and the result is an ordinary DataFrame feeding the one
-continuous plan — no driver accumulation, no XCom.
+accumulated via XCom). Here every page lands as part of one ordinary
+DataFrame feeding the one continuous plan — no driver accumulation, no
+XCom — by one of two readers:
 
-Transport is an option: `path` reads staged `page-N.jsonl` files from a
-directory; `url` (a template with `{page}`) fetches each page with
-stdlib urllib INSIDE the executor task — tested against a localhost
-HTTP server in `tests/test_http_source.py`. Pages are independent, so
-throughput scales with executors, bounded only by the API's rate limit.
+- `read_pages` lands staged `page-N.jsonl` files through Spark's own JSON
+  file source. It is a plain file scan: no Python planner or worker
+  starts, and rows are parsed in the JVM.
+- `read_pages_http` fetches each page with stdlib urllib INSIDE an
+  executor task through the Spark 4 Python DataSource `paged_jsonl`
+  (`url`, a template with `{page}`; one input partition per page) —
+  tested against a localhost HTTP server in `tests/test_http_source.py`.
+  Pages are independent, so throughput scales with executors, bounded
+  only by the API's rate limit.
 
-STREAMING uses the same partitioned fan-out: the default stream reader
+STREAMING uses the same partitioned fan-out over either a staged
+directory (`path`) or HTTP (`url`): the default stream reader
 (`PagedJsonlPartitionedStreamReader`) probes availability driver-side
 (listdir / HTTP HEAD — metadata only) and fetches every page of the
 micro-batch executor-side via `partitions(start, end)`. `mode=simple`
@@ -44,9 +47,9 @@ def make_paged_jsonl_datasource():
     )
 
     def _page_lines(path, url_template, timeout, page):
-        """Shared page transport (batch + streaming, executor-side):
-        either a staged `page-N.jsonl` file or an HTTP GET of the page
-        URL — stdlib urllib only, one fetch per task."""
+        """Shared page transport (executor-side): an HTTP GET of the page
+        URL — stdlib urllib only, one fetch per task — or, for the
+        streaming readers only, a staged `page-N.jsonl` file."""
         if url_template:
             import urllib.request
 
@@ -201,18 +204,16 @@ def make_paged_jsonl_datasource():
             return iter(rows)
 
     class PagedJsonlReader(DataSourceReader):
-        """One input partition per page. Transport is either a staged
-        local directory (`path`) or HTTP (`url` — a template formatted
-        with `{page}`, fetched with stdlib urllib INSIDE the executor
-        task): executors pull pages concurrently, Spark retries a failed
-        fetch per-task, and no page ever accumulates on the driver —
-        the scale-out version of the reference's sequential
+        """One input partition per page, fetched over HTTP (`url` — a
+        template formatted with `{page}`) with stdlib urllib INSIDE the
+        executor task: executors pull pages concurrently, Spark retries
+        a failed fetch per-task, and no page ever accumulates on the
+        driver — the scale-out version of the reference's sequential
         `requests.get` loop (`pyspark_dag2.py:52-77`)."""
 
         def __init__(self, schema, options):
             self.schema_obj = schema
-            self.path = options.get("path")
-            self.url_template = options.get("url")
+            self.url_template = options["url"]
             self.n_pages = int(options.get("npages", "0"))
             self.timeout = float(options.get("timeout", "10"))
 
@@ -225,7 +226,7 @@ def make_paged_jsonl_datasource():
 
             fields = [f.name for f in self.schema_obj.fields]
             for line in _page_lines(
-                self.path, self.url_template, self.timeout, partition.value
+                None, self.url_template, self.timeout, partition.value
             ):
                 if line.strip():
                     rec = json.loads(line)
@@ -271,14 +272,19 @@ def register(spark: SparkSession) -> None:
 def read_pages(
     spark: SparkSession, path: str, n_pages: int, schema: str
 ) -> DataFrame:
-    """`spark.read.format("paged_jsonl")` over a staged page directory."""
-    register(spark)
+    """Land the staged pages `path/page-{i}.jsonl`, i in [0, n_pages),
+    through Spark's JSON file source with the declared `schema`.
+
+    The explicit page list makes a missing page fail the read and leaves
+    any other file in `path` unread. FAILFAST makes a malformed line
+    raise instead of landing as a NULL row; blank lines are skipped,
+    fields outside `schema` are ignored and a missing field reads NULL."""
+    import os
+
     return (
-        spark.read.format(FORMAT_NAME)
-        .option("path", path)
-        .option("npages", str(n_pages))
-        .option("schema", schema)
-        .load()
+        spark.read.schema(schema)
+        .option("mode", "FAILFAST")
+        .json([os.path.join(path, f"page-{i}.jsonl") for i in range(n_pages)])
     )
 
 

@@ -202,3 +202,84 @@ def test_streaming_http_pages_fetch_executor_side(spark, tmp_path):
         q.stop()
         srv.shutdown()
     assert batches[-1] == (PAGE_SIZE, 1)  # exactly the new page, once
+
+
+def _serve_dir(directory):
+    """A localhost HTTP server over `directory`; returns (server, base URL)."""
+    import functools
+    from http.server import SimpleHTTPRequestHandler
+
+    class Quiet(SimpleHTTPRequestHandler):
+        def log_message(self, *a):
+            pass
+
+    srv = ThreadingHTTPServer(
+        ("127.0.0.1", 0), functools.partial(Quiet, directory=str(directory))
+    )
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    return srv, f"http://127.0.0.1:{srv.server_address[1]}"
+
+
+def _write_pages(directory, pages):
+    directory.mkdir()
+    for i, text in enumerate(pages):
+        (directory / f"page-{i}.jsonl").write_text(text, encoding="utf-8")
+
+
+EDGE_SCHEMA = "id BIGINT, name STRING, amount DOUBLE"
+
+
+def test_staged_and_http_landing_agree_on_page_edges(spark, tmp_path):
+    """`read_pages` (Spark's JSON file source) and `read_pages_http` (the
+    Python DataSource over HTTP) land the same page set alike: a blank
+    line, a whitespace-only line, an extra field, a missing field and
+    ints in a `double` column. A page past `n_pages` is not read, and a
+    missing page fails the staged read."""
+    from collections import Counter
+
+    pages = tmp_path / "pages"
+    _write_pages(pages, [
+        '{"id": 1, "name": "a", "amount": 2}\n'
+        "\n"
+        '{"id": 2, "name": "b", "amount": 1.5, "extra": "x"}\n'
+        " \t \n"
+        '{"id": 3, "amount": 7}\n',
+        '{"id": 4, "name": "d", "amount": 0.25}\n',
+        '{"id": 99, "name": "stray", "amount": 0}\n',
+    ])
+    with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+        rest_datasource.read_pages(spark, str(pages), 4, EDGE_SCHEMA)
+    srv, base = _serve_dir(pages)
+    try:
+        staged = rest_datasource.read_pages(spark, str(pages), 2, EDGE_SCHEMA)
+        http = rest_datasource.read_pages_http(
+            spark, base + "/page-{page}.jsonl", 2, EDGE_SCHEMA
+        )
+        assert staged.schema == http.schema
+        got = Counter(map(tuple, staged.collect()))
+        assert got == Counter(map(tuple, http.collect()))
+    finally:
+        srv.shutdown()
+    assert got == Counter([
+        (1, "a", 2.0), (2, "b", 1.5), (3, None, 7.0), (4, "d", 0.25),
+    ])
+
+
+def test_malformed_page_line_fails_both_landings(spark, tmp_path):
+    """A malformed line raises on both paths; it never lands as a dropped
+    row or a NULL row."""
+    pages = tmp_path / "pages"
+    _write_pages(pages, ['{"id": 1, "name": "a", "amount": 1.0}\n{"id": 2, "name": \n'])
+    srv, base = _serve_dir(pages)
+    try:
+        for df, error in (
+            (rest_datasource.read_pages(spark, str(pages), 1, EDGE_SCHEMA),
+             "MALFORMED_RECORD_IN_PARSING"),
+            (rest_datasource.read_pages_http(
+                spark, base + "/page-{page}.jsonl", 1, EDGE_SCHEMA
+            ), "JSONDecodeError"),
+        ):
+            with pytest.raises(Exception, match=error):
+                df.collect()
+    finally:
+        srv.shutdown()

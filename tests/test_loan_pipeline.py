@@ -138,7 +138,7 @@ def test_csv_dictionaries_feed_the_clean_pipeline(spark, raw, staging, tmp_path)
     )
 
     csvs = {
-        "status": "Status,Standard\nFully Repaid,Repaid\nOrphan\n",
+        "status": "Status,Standard\nFully Repaid,Repaid\nOrphan\nBlank,\n",
         "type": "Type,Standard\nFSL,Fixed Spread Loan\n",
         "country": "Country,Standard\nFrance,France\nFrnace,FRANCE\n",
         "region": "Region,Standard\nEUROPE,Europe and Central Asia\n",
@@ -150,14 +150,12 @@ def test_csv_dictionaries_feed_the_clean_pipeline(spark, raw, staging, tmp_path)
         paths[name] = tmp_path / f"{name}.csv"
         paths[name].write_text(text, encoding="utf-8")
     maps = {name: read_dict_csv(str(path)) for name, path in paths.items()}
-    # the short row has no value, so the dict reader skips it
+    # the short row and the `key,` row have no value: both readers skip
+    # them, so neither path recodes the key to NULL or ""
     assert maps == MAPS
     frame = read_dict_df(spark, str(paths["status"]))
     assert frame.columns == ["key", "value"]
-    # the DataFrame reader keeps it with a NULL value
-    assert sorted(map(tuple, frame.collect())) == [
-        ("fully repaid", "repaid"), ("orphan", None),
-    ]
+    assert sorted(map(tuple, frame.collect())) == sorted(maps["status"].items())
     got = lp.run_clean_pipeline(raw, maps, BK_MAPS)
     key = "loan_number"
     assert sorted(got.collect(), key=lambda r: r[key]) == sorted(
@@ -193,6 +191,73 @@ def test_star_build_and_fact(spark, staging):
     fact2 = lp.build_fact_loan(staging2, dims2)
     assert fact2.count() == 4
     assert fact2.select("fk_country").distinct().collect()[0][0] == ctry[1].pk_country_sk
+
+
+def _fact_by_lookup(staging, dims):
+    """`build_fact_loan` in its lookup form: each role-playing date key
+    joined from DimDate (built from the same staging, as `init_star`
+    builds it) instead of projected."""
+    from etl_pipline_ibrd_loan_system_spark.operators.star import build_fact
+
+    fact = staging
+    for c in lp.DATE_FK_COLS:
+        fact = fact.withColumn(c, F.to_date(F.col(c), "dd-MMM-yyyy"))
+    lookups = [
+        (dims[f"dim_{name}"].filter(F.col("is_current")), {bk: bk},
+         {f"pk_{name}_sk": f"fk_{name}"})
+        for name, (bk, *_rest) in lp.DIM_SPECS.items()
+    ]
+    lookups += [(dims["dim_date"], {c: "date"}, {"date_sk": f"{c}_sk"})
+                for c in lp.DATE_FK_COLS]
+    out = build_fact(fact, lookups, measure_cols=lp.MEASURE_COLS,
+                     key_cols=["loan_number"])
+    for c, t in lp.FACT_SINK_CASTS.items():
+        out = out.withColumn(c, F.col(c).cast(t))
+    return out
+
+
+def test_fact_date_keys_by_projection_equal_dimdate_lookups(spark, staging):
+    """The fact's 4 date keys are projected (`date_sk`), not looked up in
+    DimDate. On the 5-row fixture plus a row with a NULL
+    board_approval_date, both forms give the same columns in the same
+    order and the same rows, and the NULL-date row drops in both."""
+    null_date = lp.run_clean_pipeline(
+        spark.createDataFrame([_raw_row("IBRD00060")], RAW_SCHEMA), MAPS, BK_MAPS
+    ).withColumn("board_approval_date", F.lit(None).cast("string"))
+    st = staging.unionByName(null_date)
+    dims = lp.init_star(st, asof="2024-01-01")
+    proj, look = lp.build_fact_loan(st, dims), _fact_by_lookup(st, dims)
+    assert proj.dtypes == look.dtypes
+    assert proj.exceptAll(look).count() == 0
+    assert look.exceptAll(proj).count() == 0
+    assert proj.count() == 4
+    assert "ibrd00060" not in {r.loan_number for r in proj.collect()}
+
+
+def test_fact_unparseable_date_behaves_alike_in_both_forms(spark, staging):
+    """A date that does not parse raises in both forms under ANSI (the
+    session's setting) and drops in both with ANSI off."""
+    bad = staging.withColumn(
+        "board_approval_date",
+        F.when(F.col("loan_number") == "ibrd00010", "not a date")
+        .otherwise(F.col("board_approval_date")),
+    )
+    dims = lp.init_star(staging, asof="2024-01-01")
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for on in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", on)
+            forms = (lp.build_fact_loan(bad, dims), _fact_by_lookup(bad, dims))
+            if on == "true":
+                for fact in forms:
+                    with pytest.raises(Exception, match="not a date"):
+                        fact.collect()
+            else:
+                for fact in forms:
+                    got = {r.loan_number for r in fact.collect()}
+                    assert len(got) == 3 and "ibrd00010" not in got
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
 
 
 def test_star_snaptable_merge_path(spark, staging, tmp_path):

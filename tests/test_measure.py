@@ -65,3 +65,25 @@ def test_job_after_the_pass_is_not_in_the_group(spark):
     after = set(sc.statusTracker().getJobIdsForGroup(None))
     # the new job carries no group, so no measured group can claim it
     assert after - before
+
+
+def test_stage_evicted_from_the_status_store_counts_as_skipped():
+    """The status store evicts stages with no completion time (skipped
+    ones) first, so a long session can drop a skipped stage of the pass
+    being measured before it is read; the pass still reports."""
+    from types import SimpleNamespace as NS
+
+    from etl_pipline_ibrd_loan_system_spark.measure import _stage_metrics
+
+    held = {1: NS(status=lambda: NS(toString=lambda: "COMPLETE"),
+                  shuffleWriteBytes=lambda: 2e6, diskBytesSpilled=lambda: 0)}
+    tracker = NS(getJobIdsForGroup=lambda g: [7],
+                 getJobInfo=lambda j: NS(stageIds=[1, 2]),
+                 getStageInfo=held.get)
+    jsc = NS(listenerBus=lambda: NS(waitUntilEmpty=lambda: None),
+             statusStore=lambda: NS(lastStageAttempt=held.__getitem__))
+    sc = NS(_jsc=NS(sc=lambda: jsc), statusTracker=lambda: tracker)
+    assert _stage_metrics(sc, "g") == {
+        "jobs": 1, "stages": 1, "skipped_stages": 1,
+        "shuffle_write_mb": 2.0, "spill_mb": 0.0,
+    }

@@ -89,7 +89,11 @@ def test_offset_store_atomic(tmp_path):
     assert not os.path.exists(str(tmp_path / "off.json") + ".tmp")
 
 
-def test_python_datasource_pages_are_partitions(spark, sf_dir, tmp_path):
+def test_read_pages_scans_staged_pages_as_json_files(spark, sf_dir, tmp_path):
+    """Staged pages land through Spark's JSON file source: the plan scans
+    a JSON `FileScan` and starts no Python data-source scan (the
+    one-partition-per-page Python reader serves HTTP only; see
+    `test_http_source.py`)."""
     import os
 
     from etl_pipline_ibrd_loan_system_spark.sources.rest_datasource import (
@@ -104,8 +108,9 @@ def test_python_datasource_pages_are_partitions(spark, sf_dir, tmp_path):
     )
     assert n == 10  # 500 docs / 50
     df = read_pages(spark, out, n, schema="doc_id bigint, n_chars bigint")
-    # one input partition per page -> parallel fetch
-    assert df.rdd.getNumPartitions() == n
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan json" in plan, plan
+    assert "BatchScan" not in plan and "(Python)" not in plan, plan
     assert df.count() == 500
     assert df.agg({"doc_id": "min"}).collect()[0][0] == 0
 
